@@ -247,8 +247,10 @@ def sort_percentile(
     # Interpolate EXACTLY as the percentile aggregate does
     # (Percentile.getPercentile): pos = p·(n-1);
     # result = (ceil(pos)-pos)·v_lo + (pos-floor(pos))·v_hi, with the
-    # exact v_lo short-circuit when pos is integral.  The algebraically
-    # equal v_lo + (v_hi-v_lo)·frac rounds differently in the last ulp —
+    # exact v_lo short-circuit when pos is integral or v_lo == v_hi (the
+    # two weights need not sum to exactly 1, so interpolating between
+    # equal values can miss them by an ulp).  The algebraically equal
+    # v_lo + (v_hi-v_lo)·frac rounds differently in the last ulp —
     # caught by the equivalence test.
     j = ranked.join(F.broadcast(n), group_col).withColumn(
         "__pos", F.lit(p) * (F.col("__n") - 1)
@@ -261,7 +263,9 @@ def sort_percentile(
     pos = F.min("__pos")
     interp = (F.ceil(pos) - pos) * v_lo + (pos - F.floor(pos)) * v_hi
     return edge.groupBy(group_col).agg(
-        F.when(F.floor(pos) == F.ceil(pos), v_lo).otherwise(interp).alias("pctl")
+        F.when((F.floor(pos) == F.ceil(pos)) | (v_lo == v_hi), v_lo)
+        .otherwise(interp)
+        .alias("pctl")
     )
 
 

@@ -42,6 +42,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from fanstats_producer_spark.sources.ndjson import frame_from_rows
+
 # fetch_feed(page_id, after, limit) ->
 #   (data: list[dict] post objects, after: str | None)
 FetchFeed = Callable[[str, str | None, int], tuple[list[dict], str | None]]
@@ -139,7 +141,7 @@ class FacebookFeedSource:
         with ThreadPoolExecutor(max_workers=max(len(page_ids), 1)) as pool:
             per_page = list(pool.map(self._collect_page, page_ids))
         all_rows = [r for rows in per_page for r in rows]
-        return self.spark.createDataFrame(all_rows, schema=FACEBOOK_POST_SCHEMA)
+        return frame_from_rows(self.spark, all_rows, FACEBOOK_POST_SCHEMA)
 
 
 def normalize_posts(posts: DataFrame) -> DataFrame:

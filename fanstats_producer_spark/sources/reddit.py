@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from fanstats_producer_spark.sources.ndjson import frame_from_rows
+
 # fetch_listing(subreddit, after, limit) ->
 #   (children: list[dict] with the kind/data envelope, after: str | None)
 FetchListing = Callable[[str, str | None, int], tuple[list[dict], str | None]]
@@ -134,7 +136,7 @@ class RedditListingSource:
         with ThreadPoolExecutor(max_workers=max(len(subreddits), 1)) as pool:
             per_sub = list(pool.map(self._collect_subreddit, subreddits))
         all_rows = [r for rows in per_sub for r in rows]
-        return self.spark.createDataFrame(all_rows, schema=REDDIT_POST_SCHEMA)
+        return frame_from_rows(self.spark, all_rows, REDDIT_POST_SCHEMA)
 
 
 def normalize_posts(posts: DataFrame) -> DataFrame:

@@ -11,9 +11,11 @@ semantics as a Spark source:
 - Pagination is cursor-serial per topic (the API forces that), but
   topics fan out in parallel — the axis the reference leaves on the
   table (it loops topics sequentially in one process, main.py:214).
-- Each page lands as rows with the pinned TWEET_SCHEMA; pages
-  accumulate via unionByName and the cap is enforced exactly like
-  main.py:136 (stop counting, then LIMIT).
+- Each topic's pages accumulate on the driver as plain dicts, cut at
+  the cap exactly like main.py:136 (stop counting, then truncate).
+  All topics' rows then become one TWEET_SCHEMA frame through
+  `ndjson.frame_from_rows`: a single Arrow table handed to the JVM, so
+  the sink's guard and write never call back into Python.
 
 Scale note: a production deployment would wrap this as a DataSourceV2
 reader with SupportsPushDownFilters/RequiredColumns so the query-string
@@ -29,7 +31,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
-from fanstats_producer_spark.sources.ndjson import TWEET_SCHEMA
+from fanstats_producer_spark.sources.ndjson import TWEET_SCHEMA, frame_from_rows
 
 # fetch_page(topic, start_time, next_token, page_size) ->
 #   (rows: list[dict], next_token: str | None)
@@ -71,4 +73,4 @@ class PaginatedSource:
         with ThreadPoolExecutor(max_workers=max(len(topics), 1)) as pool:
             per_topic = list(pool.map(lambda t: self._collect_topic(t, start_time), topics))
         all_rows = [r for rows in per_topic for r in rows]
-        return self.spark.createDataFrame(all_rows, schema=TWEET_SCHEMA)
+        return frame_from_rows(self.spark, all_rows, TWEET_SCHEMA)

@@ -16,7 +16,8 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from fanstats_producer_spark import registry
 from fanstats_producer_spark.plans.checks import explain_str
@@ -38,7 +39,7 @@ def main() -> int:
         print(f"unknown keys: {unknown}", file=sys.stderr)
         return 2
 
-    outdir = os.path.join("/root/repo/plans", args.tag)
+    outdir = os.path.join(ROOT, "plans", args.tag)
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark("dump-key-plans")
     from fanstats_producer_spark.operators.layout import ensure_layout

@@ -6,9 +6,11 @@ and iterate` evidence trail (run after any plan-affecting change).
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from fanstats_producer_spark import registry
 from fanstats_producer_spark.plans.checks import explain_str
@@ -337,7 +339,7 @@ def main() -> None:
             if re.search(r"PushedFilters|PartitionFilters|ReadSchema|Location", line)
         )
         out += [f"## {key}", "", note, "", "```", tree, "", details, "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("PLANS.md written")
 

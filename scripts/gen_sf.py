@@ -22,6 +22,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 VOCAB = (
     "spark window merge table column vector stream value data small join "
     "filter big group hash customer sort order slow line part fast the row "
@@ -444,7 +446,7 @@ def generate(
 
 if __name__ == "__main__":
     sf = float(sys.argv[1]) if len(sys.argv) > 1 else 1.0
-    out = sys.argv[2] if len(sys.argv) > 2 else f"/root/repo/localdata/sf{sys.argv[1] if len(sys.argv) > 1 else '1'}"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "localdata", f"sf{sys.argv[1] if len(sys.argv) > 1 else '1'}")
     hot = float(sys.argv[3]) if len(sys.argv) > 3 else 0.0
     planted = int(sys.argv[4]) if len(sys.argv) > 4 else 0
     margins = int(sys.argv[5]) if len(sys.argv) > 5 else 0

@@ -33,7 +33,8 @@ import sys
 import time
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, os.path.dirname(_HERE))
+ROOT = os.path.dirname(_HERE)
+sys.path.insert(0, ROOT)
 sys.path.insert(0, _HERE)
 
 from sf1_closure_check import (  # noqa: E402
@@ -655,8 +656,8 @@ def run_key(spark, sf_dir: str, key: str, staged: bool, deep: bool = False) -> d
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/repo/localdata/sf10")
-    ap.add_argument("--out", default="/root/repo/SF10_CLOSURE.json")
+    ap.add_argument("--sf-dir", default=os.path.join(ROOT, "localdata", "sf10"))
+    ap.add_argument("--out", default=os.path.join(ROOT, "SF10_CLOSURE.json"))
     ap.add_argument("--keys", default=",".join(CLOSURE_KEYS))
     ap.add_argument("--plain", default=",".join(PLAIN_KEYS))
     ap.add_argument(

@@ -32,7 +32,8 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from fanstats_producer_spark import registry
 from fanstats_producer_spark.io import TABLES
@@ -40,7 +41,7 @@ from fanstats_producer_spark.io import TABLES
 registry.load_all()
 
 SF001 = "/root/testdata/sf0.01"
-SF1 = "/root/repo/localdata/sf1"
+SF1 = os.path.join(ROOT, "localdata", "sf1")
 KEYS = ["x04e_dedup_clusters", "x59_verified_dedup", "x61_semdedup",
         "x60_verify_gate_effect", "x96_image_cluster_dedup"]
 
@@ -335,7 +336,7 @@ def main() -> int:
     results = sf1_check()
     print(json.dumps(results))
     out = os.environ.get(
-        "SF1_CLOSURE_OUT", "/root/repo/SF1_CLOSURE_LATEST.json"
+        "SF1_CLOSURE_OUT", os.path.join(ROOT, "SF1_CLOSURE_LATEST.json")
     )
     with open(out, "w") as f:
         json.dump(results, f, indent=1)

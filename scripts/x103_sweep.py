@@ -19,13 +19,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from fanstats_producer_spark.session import get_spark
 
 
 def ensure_fixture(sf: float, planted: int) -> str:
-    out = f"/root/repo/localdata/planted{sf}"
+    out = os.path.join(ROOT, "localdata", f"planted{sf}")
     if not os.path.exists(os.path.join(out, "embeddings.parquet")):
         from scripts.gen_sf import generate
 
@@ -86,7 +87,7 @@ def main() -> None:
                 f" div={fd:2d}  recall={mean:.3f}"
                 f"  {sorted(per_q.values())}  {dt:.1f}s"
             )
-    with open("/root/repo/X103_SWEEP.json", "w") as fh:
+    with open(os.path.join(ROOT, "X103_SWEEP.json"), "w") as fh:
         json.dump({"sf": sf, "results": results}, fh, indent=1)
     print("wrote X103_SWEEP.json")
 

@@ -21,13 +21,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from fanstats_producer_spark.session import get_spark
 
 
 def ensure_fixture(sf: float, planted: int) -> str:
-    out = f"/root/repo/localdata/planted{sf}"
+    out = os.path.join(ROOT, "localdata", f"planted{sf}")
     if not os.path.exists(os.path.join(out, "embeddings.parquet")):
         from scripts.gen_sf import generate
 

@@ -27,7 +27,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from fanstats_producer_spark.session import get_spark
 
@@ -36,7 +37,7 @@ def ensure_fixture(sf: float, margins: int) -> str:
     # ALWAYS regenerate (seconds at sweep SFs): an existence check would
     # silently reuse a fixture generated with a different margins count
     # or an older gen_sf, recording a pass against stale geometry
-    out = f"/root/repo/localdata/margins{sf:g}_m{margins}"
+    out = os.path.join(ROOT, "localdata", f"margins{sf:g}_m{margins}")
     from scripts.gen_sf import generate
 
     generate(sf, out, planted_margins=margins)

@@ -1,6 +1,7 @@
 """Driver-contract invariants that live outside any single operator:
 the README's advertised query count must track the registry (ADVICE r9
-— the count drifted 227 vs 228 when q82 landed after the README edit).
+— the count drifted 227 vs 228 when q82 landed after the README edit),
+and no code names the absolute path of one particular checkout.
 """
 
 from __future__ import annotations
@@ -24,3 +25,24 @@ def test_readme_count_matches():
         f"README claims {m.group(0)} but registry has {n} keys — "
         "update the README count"
     )
+
+
+def test_no_file_hard_codes_a_checkout_path():
+    """Scripts and tests find the package from their own ``__file__``.
+    A literal checkout path would make a copy of the repo (an A/B tree,
+    a benchmark run from another directory) silently import and measure
+    the code at that path instead of its own."""
+    here = str(REPO)
+    pinned = re.compile(r"""sys\.path\.insert\(\s*0\s*,\s*[rf]?["']/""")
+    offenders = []
+    for top in ("scripts", "tests", "fanstats_producer_spark"):
+        for path in sorted((REPO / top).rglob("*")):
+            if not path.is_file() or "__pycache__" in path.parts:
+                continue
+            try:
+                text = path.read_text()
+            except UnicodeDecodeError:
+                continue
+            if here in text or pinned.search(text):
+                offenders.append(str(path.relative_to(REPO)))
+    assert offenders == [], f"hard-coded checkout path in {offenders}"

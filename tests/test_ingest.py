@@ -16,13 +16,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from fanstats_producer_spark.sources import config as cfg
+from fanstats_producer_spark.sources.facebook import FACEBOOK_POST_SCHEMA
 from fanstats_producer_spark.sources.ndjson import (
     TWEET_SCHEMA,
     default_source_filters,
+    frame_from_rows,
     read_tweets,
     with_partition_columns,
     write_partitioned,
 )
+from fanstats_producer_spark.sources.reddit import REDDIT_POST_SCHEMA
 from fanstats_producer_spark.sources.rest import PaginatedSource
 
 
@@ -574,3 +577,131 @@ def test_kafka_dead_letter_split(spark):
     assert len(d) == 1
     assert d[0].raw_payload == "<binary garbage>"
     assert (d[0].kafka_partition, d[0].kafka_offset) == (2, 9)
+
+
+# --- driver rows -> frame: the Arrow path lands what createDataFrame lands ---
+# Non-str values in string fields: createDataFrame renders them (5 -> '5',
+# True -> 'true', a dict as its Python repr); a bare Arrow build raises.
+_NOT_STR = [5, 1.5, True, {"a": 1}, [1, "x"], None]
+
+_ROW_CASES = {
+    "tweet": (
+        TWEET_SCHEMA,
+        [
+            _tweet(1, 10, hashtags=["playoffs", "nba"]),
+            {"id": "2", "text": "missing nested structs"},
+            {
+                "id": "3",
+                "text": "None structs and arrays",
+                "public_metrics": None,
+                "entities": None,
+                "context_annotations": None,
+            },
+            {
+                "id": "4",
+                "public_metrics": {"like_count": 2},  # the other counts missing
+                "entities": {"hashtags": None, "mentions": [], "urls": [None]},
+                "context_annotations": [{"domain": None}, {"entity": {"id": "9"}}],
+            },
+            {  # extra keys, top level and nested, are ignored
+                "id": "5",
+                "extra": 1,
+                "public_metrics": {"retweet_count": 1, "bogus": "x"},
+                "entities": {"hashtags": [{"tag": "t", "start": 0, "end": 1, "x": 2}]},
+            },
+            *[
+                {
+                    "id": v,
+                    "text": v,
+                    "entities": {"hashtags": [{"tag": v}]},
+                    "context_annotations": [{"entity": {"name": v}}],
+                }
+                for v in _NOT_STR
+            ],
+        ],
+    ),
+    "reddit": (
+        REDDIT_POST_SCHEMA,
+        [
+            {
+                "post_id": "t3_a",
+                "subreddit": "nba",
+                "title": "t",
+                "selftext": "",
+                "author": "u",
+                "created_utc": 1705320000.5,
+                "score": 2**40,
+                "num_comments": 0,
+            },
+            {"post_id": "t3_b", "created_utc": None, "extra": [1]},
+            *[{"post_id": v, "title": v, "author": v} for v in _NOT_STR],
+        ],
+    ),
+    "facebook": (
+        FACEBOOK_POST_SCHEMA,
+        [
+            {
+                "post_id": "1_2",
+                "page": "nba",
+                "message": "m",
+                "author_id": "7",
+                "author_name": "NBA",
+                "created_time": "2024-01-15T12:00:00+0000",
+                "reactions": 3,
+                "comments": 0,
+                "shares": 1,
+            },
+            {"post_id": "1_3", "reactions": None, "from": {"id": "x"}},
+            *[{"post_id": v, "message": v, "author_name": v} for v in _NOT_STR],
+        ],
+    ),
+}
+
+# Rows the list path rejects: a str or a float in an int field, and an
+# int out of the field's range.
+_BAD_ROWS = {
+    "tweet": [
+        {"id": "1", "public_metrics": {"like_count": "3"}},
+        {"id": "1", "public_metrics": {"like_count": 1.0}},
+        {"id": "1", "public_metrics": {"like_count": 2**31}},
+        {"id": "1", "entities": {"hashtags": [{"start": "0"}]}},
+    ],
+    "reddit": [
+        {"post_id": "a", "score": "3"},
+        {"post_id": "a", "score": 1.0},
+        {"post_id": "a", "score": 2**63},
+    ],
+    "facebook": [
+        {"post_id": "a", "reactions": "3"},
+        {"post_id": "a", "reactions": 1.0},
+        {"post_id": "a", "reactions": 2**63},
+    ],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_ROW_CASES))
+def test_frame_from_rows_matches_create_dataframe(spark, case):
+    """The Arrow-built frame lands exactly the rows, nulls and string
+    renderings that createDataFrame(rows, schema) lands, empty included."""
+    schema, rows = _ROW_CASES[case]
+    for batch in ([], rows):
+        got = frame_from_rows(spark, batch, schema)
+        want = spark.createDataFrame(batch, schema=schema)
+        assert got.schema == want.schema == schema
+        assert got.collect() == want.collect()
+        assert got.isEmpty() == (not batch)
+
+
+@pytest.mark.parametrize("case", sorted(_BAD_ROWS))
+def test_frame_from_rows_raises_like_create_dataframe(spark, case):
+    """A row createDataFrame rejects fails the Arrow build with the same
+    pyspark error class and parameters."""
+    schema, good = _ROW_CASES[case]
+    for bad in _BAD_ROWS[case]:
+        with pytest.raises(Exception) as want:
+            spark.createDataFrame([good[0], bad], schema=schema)
+        with pytest.raises(Exception) as got:
+            frame_from_rows(spark, [good[0], bad], schema)
+        assert type(got.value) is type(want.value)
+        assert got.value.getCondition() == want.value.getCondition()
+        assert got.value.getMessageParameters() == want.value.getMessageParameters()

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import argparse
 import datetime
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,14 +42,15 @@ def collect_twitter(
     cfg: DataFileConfig,
     fetch_page: FetchPage,
     start_time: str,
-    max_results: int = 3000,
 ) -> DataFrame:
     """The Twitter collector (main.py:162-200): paginated scan over the
-    topic + aliases, source predicates applied declaratively."""
+    topic + aliases from ``start_time`` on, source predicates applied
+    declaratively."""
     topics = list(dict.fromkeys([cfg.topic, *cfg.aliases]))
-    src = PaginatedSource(spark, fetch_page, max_results=max_results)
-    df = src.scan(topics, start_time)
-    return default_source_filters(df, topic=None)
+    src = PaginatedSource(
+        spark, lambda topic, token, size: fetch_page(topic, start_time, token, size)
+    )
+    return default_source_filters(src.scan(topics), topic=None)
 
 
 def run_pipeline(
@@ -133,7 +133,6 @@ def main() -> None:
     ap.add_argument("-d", "--data-file", required=True)
     ap.add_argument("-p", "--platforms-file", required=True)
     ap.add_argument("-o", "--output", required=True)
-    ap.add_argument("-m", "--max-results", type=int, default=3000)
     ap.add_argument("--fetcher", choices=["demo"], default="demo")
     args = ap.parse_args()
     spark = get_spark("fanstats-producer-pipeline")

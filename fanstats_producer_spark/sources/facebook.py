@@ -20,20 +20,19 @@ Twitter and Reddit, and this module models that shape faithfully:
   them — absent summaries land as 0;
 - the per-request ``limit`` clamps at 100 like the other platforms.
 
-The HTTP seam is injectable exactly like sources/rest.py and
-sources/reddit.py (no network in this repo; tests inject a
-deterministic fake).  ``collector()`` adapts landed posts to the
-TWEET_SCHEMA column names so ``PlatformRegistry.collect_all`` unions
-Facebook rows with the Twitter and Reddit collectors' by name — one
-pipeline, N platforms.
+The cursor loop, clamp, cap and liveness guards are rest.py's shared
+`iter_chain`; this module only adds the schema and the per-item row
+adapter.  The HTTP seam is ``fetch_feed(page_id, after, limit) -> (post
+objects, after)``, injectable exactly like rest.py's (no network in
+this repo; tests inject a deterministic fake).  ``normalize_posts``
+adapts landed posts to the TWEET_SCHEMA column names, so a
+``run_pipeline`` collector lands Facebook rows in the same lake as the
+Twitter and Reddit ones — one pipeline, N platforms.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -42,14 +41,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from fanstats_producer_spark.sources.ndjson import frame_from_rows
-
-# fetch_feed(page_id, after, limit) ->
-#   (data: list[dict] post objects, after: str | None)
-FetchFeed = Callable[[str, str | None, int], tuple[list[dict], str | None]]
-
-GRAPH_LIMIT = 100            # Graph API per-request max for /feed
-MAX_POSTS = 3000             # parity with rest.py's MAX_RESULTS cap
+from fanstats_producer_spark.sources.rest import PaginatedSource
 
 FACEBOOK_POST_SCHEMA = StructType(
     [
@@ -77,71 +69,34 @@ def _summary_count(post: dict, edge: str) -> int:
         return 0
 
 
-class FacebookFeedSource:
-    def __init__(
-        self,
-        spark: SparkSession,
-        fetch_feed: FetchFeed,
-        limit: int = GRAPH_LIMIT,
-        max_posts: int = MAX_POSTS,
-    ) -> None:
-        self.spark = spark
-        self.fetch_feed = fetch_feed
-        self.limit = min(limit, GRAPH_LIMIT)
-        self.max_posts = max_posts
+class FacebookFeedSource(PaginatedSource):
+    schema = FACEBOOK_POST_SCHEMA
 
-    def _collect_page(self, page_id: str) -> list[dict]:
-        rows: list[dict] = []
-        after: str | None = None
-        seen_cursors: set[str] = set()
-        while len(rows) < self.max_posts:
-            before = len(rows)
-            data, after = self.fetch_feed(page_id, after, self.limit)
-            for post in data:
-                if not isinstance(post, dict) or not post.get("id"):
-                    # deleted/permission-stripped posts arrive as bare
-                    # stubs; a row without an id is unusable — skip it
-                    # rather than kill the scan (the rest.py tolerance
-                    # contract: land what's landable)
-                    continue
-                frm = post.get("from")
-                if not isinstance(frm, dict):  # stripped/odd author
-                    frm = {}
-                try:
-                    shares = int((post.get("shares") or {}).get("count") or 0)
-                except (TypeError, ValueError):
-                    shares = 0
-                rows.append(
-                    {
-                        "post_id": str(post["id"]),
-                        "page": page_id,
-                        "message": post.get("message", ""),
-                        "author_id": frm.get("id"),
-                        "author_name": frm.get("name"),
-                        "created_time": post.get("created_time"),
-                        "reactions": _summary_count(post, "reactions"),
-                        "comments": _summary_count(post, "comments"),
-                        "shares": shares,
-                    }
-                )
-            if not after:  # feed exhausted
-                break
-            # liveness guards (same contract as reddit.py): a server
-            # that keeps handing back a cursor over pages with no
-            # usable rows, or that repeats a cursor, must not spin the
-            # collector forever
-            if len(rows) == before or after in seen_cursors:
-                break
-            seen_cursors.add(after)
-        return rows[: self.max_posts]
-
-    def scan(self, page_ids: list[str]) -> DataFrame:
-        """Pages fan out in parallel (each feed's cursor chain is
-        serial), landing as one schema-pinned DataFrame."""
-        with ThreadPoolExecutor(max_workers=max(len(page_ids), 1)) as pool:
-            per_page = list(pool.map(self._collect_page, page_ids))
-        all_rows = [r for rows in per_page for r in rows]
-        return frame_from_rows(self.spark, all_rows, FACEBOOK_POST_SCHEMA)
+    @staticmethod
+    def row(post: dict, page_id: str) -> dict | None:
+        if not isinstance(post, dict) or not post.get("id"):
+            # deleted/permission-stripped posts arrive as bare stubs; a
+            # row without an id is unusable — skip it rather than kill
+            # the scan (the rest.py contract: land what's landable)
+            return None
+        frm = post.get("from")
+        if not isinstance(frm, dict):  # stripped/odd author
+            frm = {}
+        try:
+            shares = int((post.get("shares") or {}).get("count") or 0)
+        except (TypeError, ValueError):
+            shares = 0
+        return {
+            "post_id": str(post["id"]),
+            "page": page_id,
+            "message": post.get("message", ""),
+            "author_id": frm.get("id"),
+            "author_name": frm.get("name"),
+            "created_time": post.get("created_time"),
+            "reactions": _summary_count(post, "reactions"),
+            "comments": _summary_count(post, "comments"),
+            "shares": shares,
+        }
 
 
 def normalize_posts(posts: DataFrame) -> DataFrame:
@@ -149,8 +104,8 @@ def normalize_posts(posts: DataFrame) -> DataFrame:
     names so the P9 union aligns: id, text (message), created_at
     (RFC-3339 ``Z`` milliseconds from the ``+0000``-offset string),
     author_id.  Platform-specific columns (page, reactions, comments,
-    shares) ride along — unionByName(allowMissingColumns=True)
-    null-fills them on the other platforms' sides.
+    shares) ride along — a mergeSchema read of the lake null-fills them
+    on the other platforms' rows.
 
     The offset-aware parse makes the conversion timezone-invariant
     (same concern as reddit.py's normalize_posts): ``to_timestamp``
@@ -176,10 +131,3 @@ def normalize_posts(posts: DataFrame) -> DataFrame:
         "shares",
     )
 
-
-def collector(
-    source: FacebookFeedSource, page_ids: list[str]
-) -> Callable[[SparkSession], DataFrame]:
-    """PlatformRegistry-shaped collector: register with
-    ``registry.register("Facebook", collector(src, ["nba"]))``."""
-    return lambda spark: normalize_posts(source.scan(page_ids))

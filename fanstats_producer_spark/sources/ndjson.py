@@ -15,15 +15,17 @@ S3 keys `<platform>/<topic>/YYYY/MM/DD/HH-MM-SS.json` (main.py:70-73,
   reference's positional dirs, which Glue surfaces as partition_0..3;
 - the empty-result guard (main.py:183-194) as an isEmpty check.
 
-Driver-side collectors (rest.py, reddit.py, facebook.py) gather their
-pages as Python dicts and hand them to `frame_from_rows`, which builds
+The driver scan (rest.PaginatedSource, for every platform) gathers its
+pages as Python dicts and hands them to `frame_from_rows`, which builds
 one Arrow table on the driver and passes it to the JVM once.  The
 frame is then a JVM-only Arrow relation: the sink's isEmpty guard and
-its write run without Python workers.
+its write run without Python workers.  The `fanstats_rest` DataSource
+readers yield the record batches of the same `arrow_table`.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.conversion import LocalDataToArrowConversion
@@ -135,6 +137,26 @@ TWEET_SCHEMA = StructType(
 )
 
 
+def arrow_table(rows: list[dict], schema: StructType) -> pa.Table:
+    """Rows as a schema-pinned Arrow table, matched to the schema by
+    field name at every nesting level.
+
+    Rows are checked and coerced as `spark.createDataFrame(rows, schema)`
+    does: pyspark's type verifier raises the same errors (a str or a
+    float in an int field, an int32 overflow), and pyspark's
+    local-data-to-Arrow converter ignores extra keys, null-fills missing
+    ones and renders non-str values in string fields the way Spark does
+    (5 -> '5', True -> 'true', {'a': 1} -> "{'a': 1}")."""
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    # convert() builds the table column by column (under half the cost of
+    # a row-wise pa.Table.from_pylist) but refuses an empty list.
+    if not rows:
+        return to_arrow_schema(schema).empty_table()
+    return LocalDataToArrowConversion.convert(rows, schema, use_large_var_types=False)
+
+
 def frame_from_rows(
     spark: SparkSession, rows: list[dict], schema: StructType
 ) -> DataFrame:
@@ -145,28 +167,11 @@ def frame_from_rows(
     as pickled Python objects behind a Python-side map: every action on
     the frame (the sink's guard, then its write) starts Python workers
     and re-pickles every row into the JVM.  Here the rows cross once,
-    as Arrow record batches.  The JVM keeps a table under
+    as the record batches of `arrow_table`.  The JVM keeps a table under
     spark.sql.execution.arrow.localRelationThreshold as a local
     relation, so the sink's isEmpty() guard then runs on the driver
-    with no Spark job.
-
-    Rows are checked and coerced as that call does: pyspark's type
-    verifier raises the same errors (a str or a float in an int field,
-    an int32 overflow), and pyspark's local-data-to-Arrow converter
-    ignores extra keys, null-fills missing ones and renders non-str
-    values in string fields the way Spark does (5 -> '5', True ->
-    'true', {'a': 1} -> "{'a': 1}")."""
-    verify = _make_type_verifier(schema)
-    for row in rows:
-        verify(row)
-    # convert() builds the table column by column (under half the cost of
-    # a row-wise pa.Table.from_pylist) but refuses an empty list.
-    table = (
-        LocalDataToArrowConversion.convert(rows, schema, use_large_var_types=False)
-        if rows
-        else to_arrow_schema(schema).empty_table()
-    )
-    return spark.createDataFrame(table, schema=schema)
+    with no Spark job."""
+    return spark.createDataFrame(arrow_table(rows, schema), schema=schema)
 
 
 def read_tweets(

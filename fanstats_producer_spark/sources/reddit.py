@@ -16,19 +16,19 @@ search API, and this module models that shape faithfully:
 - the per-request ``limit`` clamps at 100, like main.py:95-96's
   RESULTS_PER_PAGE clamp.
 
-The HTTP seam is injectable exactly like sources/rest.py (no network
-in this repo; tests inject a deterministic fake).  ``collector()``
-adapts the landed posts to the TWEET_SCHEMA column names so
-``PlatformRegistry.collect_all`` unions Reddit rows with the Twitter
-collector's by name — one pipeline, N platforms.
+The cursor loop, clamp, cap and liveness guards are rest.py's shared
+`iter_chain`; this module only adds the schema and the per-item row
+adapter.  The HTTP seam is ``fetch_listing(subreddit, after, limit) ->
+(children with the kind/data envelope, after)``, injectable exactly like
+rest.py's (no network in this repo; tests inject a deterministic fake).
+``normalize_posts`` adapts the landed posts to the TWEET_SCHEMA column
+names, so a ``run_pipeline`` collector lands Reddit rows in the same
+lake as Twitter's — one pipeline, N platforms.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -38,14 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from fanstats_producer_spark.sources.ndjson import frame_from_rows
-
-# fetch_listing(subreddit, after, limit) ->
-#   (children: list[dict] with the kind/data envelope, after: str | None)
-FetchListing = Callable[[str, str | None, int], tuple[list[dict], str | None]]
-
-LISTING_LIMIT = 100          # Reddit's per-request max
-MAX_POSTS = 3000             # parity with rest.py's MAX_RESULTS cap
+from fanstats_producer_spark.sources.rest import PaginatedSource
 
 REDDIT_POST_SCHEMA = StructType(
     [
@@ -61,91 +54,53 @@ REDDIT_POST_SCHEMA = StructType(
 )
 
 
-class RedditListingSource:
-    def __init__(
-        self,
-        spark: SparkSession,
-        fetch_listing: FetchListing,
-        limit: int = LISTING_LIMIT,
-        max_posts: int = MAX_POSTS,
-    ) -> None:
-        self.spark = spark
-        self.fetch_listing = fetch_listing
-        self.limit = min(limit, LISTING_LIMIT)
-        self.max_posts = max_posts
+class RedditListingSource(PaginatedSource):
+    schema = REDDIT_POST_SCHEMA
 
-    def _collect_subreddit(self, subreddit: str) -> list[dict]:
-        rows: list[dict] = []
-        after: str | None = None
-        seen_cursors: set[str] = set()
-        while len(rows) < self.max_posts:
-            before = len(rows)
-            children, after = self.fetch_listing(subreddit, after, self.limit)
-            for child in children:
-                if child.get("kind") != "t3":  # only link/self posts
-                    continue
-                d = child.get("data") or {}
-                if not d.get("id"):
-                    # removed/deleted posts can arrive field-stripped;
-                    # a row without an id is unusable — skip it rather
-                    # than kill the whole scan (the rest.py tolerance
-                    # contract: land what's landable)
-                    continue
-                # per-row tolerance: a malformed numeric field nulls /
-                # zeroes that field instead of killing the whole scan
-                # (the rest.py contract: land what's landable)
-                cu = d.get("created_utc")
-                try:
-                    cu = float(cu) if cu is not None else None
-                except (TypeError, ValueError):
-                    cu = None
-                try:
-                    score = int(d.get("score") or 0)
-                except (TypeError, ValueError):
-                    score = 0
-                try:
-                    num_comments = int(d.get("num_comments") or 0)
-                except (TypeError, ValueError):
-                    num_comments = 0
-                rows.append(
-                    {
-                        "post_id": d["id"],
-                        "subreddit": d.get("subreddit", subreddit),
-                        "title": d.get("title", ""),
-                        "selftext": d.get("selftext", ""),
-                        "author": d.get("author"),
-                        "created_utc": cu,
-                        "score": score,
-                        "num_comments": num_comments,
-                    }
-                )
-            if not after:  # listing exhausted
-                break
-            # liveness guards: a server that keeps handing back a
-            # cursor while yielding pages with no usable rows (all
-            # filtered), or that repeats a cursor, must not spin the
-            # collector forever
-            if len(rows) == before or after in seen_cursors:
-                break
-            seen_cursors.add(after)
-        return rows[: self.max_posts]
-
-    def scan(self, subreddits: list[str]) -> DataFrame:
-        """Subreddits fan out in parallel (each listing's cursor chain
-        is serial), landing as one schema-pinned DataFrame."""
-        with ThreadPoolExecutor(max_workers=max(len(subreddits), 1)) as pool:
-            per_sub = list(pool.map(self._collect_subreddit, subreddits))
-        all_rows = [r for rows in per_sub for r in rows]
-        return frame_from_rows(self.spark, all_rows, REDDIT_POST_SCHEMA)
+    @staticmethod
+    def row(child: dict, subreddit: str) -> dict | None:
+        if child.get("kind") != "t3":  # only link/self posts
+            return None
+        d = child.get("data") or {}
+        if not d.get("id"):
+            # removed/deleted posts can arrive field-stripped; a row
+            # without an id is unusable — skip it rather than kill the
+            # whole scan (the rest.py contract: land what's landable)
+            return None
+        # per-row tolerance: a malformed numeric field nulls / zeroes
+        # that field instead of killing the whole scan
+        cu = d.get("created_utc")
+        try:
+            cu = float(cu) if cu is not None else None
+        except (TypeError, ValueError):
+            cu = None
+        try:
+            score = int(d.get("score") or 0)
+        except (TypeError, ValueError):
+            score = 0
+        try:
+            num_comments = int(d.get("num_comments") or 0)
+        except (TypeError, ValueError):
+            num_comments = 0
+        return {
+            "post_id": d["id"],
+            "subreddit": d.get("subreddit", subreddit),
+            "title": d.get("title", ""),
+            "selftext": d.get("selftext", ""),
+            "author": d.get("author"),
+            "created_utc": cu,
+            "score": score,
+            "num_comments": num_comments,
+        }
 
 
 def normalize_posts(posts: DataFrame) -> DataFrame:
     """Adapt landed Reddit posts to the Twitter collector's column
     names so the P9 union aligns: id, text (title + selftext),
     created_at (RFC-3339 from epoch seconds), author_id.  Platform-
-    specific columns (subreddit, score, num_comments) ride along —
-    unionByName(allowMissingColumns=True) null-fills them on the
-    Twitter side, exactly the drift the dispatch layer tolerates."""
+    specific columns (subreddit, score, num_comments) ride along — a
+    mergeSchema read of the lake null-fills them on the other
+    platforms' rows, the drift the JSON landing tolerates."""
     return posts.select(
         F.col("post_id").alias("id"),
         F.when(
@@ -172,10 +127,3 @@ def normalize_posts(posts: DataFrame) -> DataFrame:
         "num_comments",
     )
 
-
-def collector(
-    source: RedditListingSource, subreddits: list[str]
-) -> Callable[[SparkSession], DataFrame]:
-    """PlatformRegistry-shaped collector: register with
-    ``registry.register("reddit", collector(src, ["nba"]))``."""
-    return lambda spark: normalize_posts(source.scan(subreddits))

@@ -8,7 +8,10 @@ executors — the parallelism axis the reference's single process leaves
 unused (reference main.py:214).  The page clamp and result cap
 (main.py:95-96, 136) are reader options, and the lookback start_time
 (main.py:263) is pushed into every request — source-side predicates,
-not post-filters.
+not post-filters.  The batch reader walks rest.py's `iter_chain`, the
+cursor loop the driver scan uses; both readers hand Spark the Arrow
+record batches of `ndjson.arrow_table`, which maps each API object onto
+TWEET_SCHEMA by field name.
 
 Fetchers are pluggable by name (an HTTP fetcher would do the bearer-token
 GET of main.py:114-120); the in-repo fetchers are deterministic and
@@ -19,6 +22,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterator
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -30,8 +34,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from fanstats_producer_spark.sources.ndjson import TWEET_SCHEMA
-from fanstats_producer_spark.sources.rest import FetchPage
+from fanstats_producer_spark.sources.ndjson import TWEET_SCHEMA, arrow_table
+from fanstats_producer_spark.sources.rest import FetchPage, PaginatedSource, iter_chain
 
 # Name → fetcher factory.  Module-level so executor-side deserialization
 # can resolve it by name (options travel as strings).
@@ -102,30 +106,16 @@ class RestReader(DataSourceReader):
     def partitions(self) -> list[InputPartition]:
         return [TopicPartition(t) for t in self.topics]
 
-    def read(self, partition: TopicPartition) -> Iterator[tuple]:
-        fetch = self.fetcher_factory()
-        n, next_token = 0, None
-        field_names = [f.name for f in TWEET_SCHEMA.fields]
-        while n < self.max_results:
-            rows, next_token = fetch(
-                partition.topic, self.start_time, next_token, self.page_size
-            )
-            for r in rows:
-                if n >= self.max_results:
-                    break
-                yield tuple(_to_row_value(r.get(name)) for name in field_names)
-                n += 1
-            if next_token is None:
-                break
-
-
-def _to_row_value(v):
-    """dicts → tuples for struct fields (the DataSource row protocol)."""
-    if isinstance(v, dict):
-        return tuple(_to_row_value(x) for x in v.values())
-    if isinstance(v, list):
-        return [_to_row_value(x) for x in v]
-    return v
+    def read(self, partition: TopicPartition) -> Iterator[pa.RecordBatch]:
+        fetch, start_time = self.fetcher_factory(), self.start_time
+        rows = iter_chain(
+            lambda topic, token, size: fetch(topic, start_time, token, size),
+            partition.topic,
+            self.page_size,
+            self.max_results,
+            PaginatedSource.row,
+        )
+        yield from arrow_table(list(rows), TWEET_SCHEMA).to_batches()
 
 
 class RestStreamReader(SimpleDataSourceStreamReader):
@@ -147,7 +137,6 @@ class RestStreamReader(SimpleDataSourceStreamReader):
         self.page_size = min(int(options.get("page_size", "100")), 100)
         self.pages_per_batch = int(options.get("pages_per_batch", "1"))
         self._fetch = None
-        self._field_names = [f.name for f in TWEET_SCHEMA.fields]
 
     def initialOffset(self) -> dict:
         return {t: None for t in self.topics}
@@ -155,7 +144,7 @@ class RestStreamReader(SimpleDataSourceStreamReader):
     def read(self, start: dict):
         if self._fetch is None:
             self._fetch = self.fetcher_factory()
-        rows_out: list[tuple] = []
+        rows_out: list[dict] = []
         end: dict = {}
         for topic in self.topics:
             token = start.get(topic)
@@ -166,15 +155,12 @@ class RestStreamReader(SimpleDataSourceStreamReader):
                 rows, token = self._fetch(
                     topic, self.start_time, token, self.page_size
                 )
-                rows_out.extend(
-                    tuple(_to_row_value(r.get(n)) for n in self._field_names)
-                    for r in rows
-                )
+                rows_out.extend(rows)
                 if token is None:
                     token = "__done__"  # cursor exhausted; stop polling
                     break
             end[topic] = token
-        return iter(rows_out), end
+        return iter(arrow_table(rows_out, TWEET_SCHEMA).to_batches()), end
 
 
 class RestDataSource(DataSource):

@@ -27,6 +27,7 @@ from fanstats_producer_spark.sources.ndjson import (
 )
 from fanstats_producer_spark.sources.reddit import REDDIT_POST_SCHEMA
 from fanstats_producer_spark.sources.rest import PaginatedSource
+from tests import fetchers
 
 
 def _tweet(i: int, day: int, lang="en", rt=False, hashtags=None, topic="NBA"):
@@ -128,7 +129,7 @@ def test_empty_result_guard(spark, tmp_path):
 
 # --- pagination / cap (P1/P4, main.py:122-160) --------------------------------
 def _fake_fetch(pages: dict[str, list[list[dict]]]):
-    def fetch(topic, start_time, next_token, page_size):
+    def fetch(topic, next_token, page_size):
         chunks = pages[topic]
         idx = 0 if next_token is None else int(next_token)
         rows = chunks[idx][:page_size]
@@ -140,15 +141,15 @@ def _fake_fetch(pages: dict[str, list[list[dict]]]):
 
 def test_pagination_follows_next_token(spark):
     pages = {"NBA": [[_tweet(i, 10) for i in range(j * 10, j * 10 + 10)] for j in range(4)]}
-    src = PaginatedSource(spark, _fake_fetch(pages), page_size=10, max_results=1000)
-    df = src.scan(["NBA"], "2024-01-01T00:00:00Z")
+    src = PaginatedSource(spark, _fake_fetch(pages), limit=10, max_rows=1000)
+    df = src.scan(["NBA"])
     assert df.count() == 40
 
 
 def test_result_cap(spark):
     pages = {"NBA": [[_tweet(i, 10) for i in range(j * 100, j * 100 + 100)] for j in range(5)]}
-    src = PaginatedSource(spark, _fake_fetch(pages), max_results=250)
-    assert src.scan(["NBA"], "t0").count() == 250  # stops at the cap (main.py:136)
+    src = PaginatedSource(spark, _fake_fetch(pages), max_rows=250)
+    assert src.scan(["NBA"]).count() == 250  # stops at the cap (main.py:136)
 
 
 def test_multi_topic_fanout_union(spark):
@@ -157,7 +158,20 @@ def test_multi_topic_fanout_union(spark):
         "NFL": [[_tweet(i, 11, topic="NFL") for i in range(30)]],
     }
     src = PaginatedSource(spark, _fake_fetch(pages))
-    assert src.scan(["NBA", "NFL"], "t0").count() == 50
+    assert src.scan(["NBA", "NFL"]).count() == 50
+
+
+@pytest.mark.parametrize(
+    "make", [fetchers.empty_pages_same_cursor, fetchers.empty_pages_fresh_cursor]
+)
+def test_pagination_ends_on_empty_pages(spark, make):
+    """An empty page behind a live cursor ends the chain, for Twitter as
+    for Reddit and Facebook, whether the server repeats its cursor or
+    hands out a fresh one each time (the fake raises after 20 requests,
+    so a scan without the guard fails instead of hanging)."""
+    fetch = make()
+    src = PaginatedSource(spark, lambda topic, token, size: fetch(topic, "t0", token, size))
+    assert src.scan(["NBA"]).count() == 0
 
 
 # --- config loading / version gates (P8/P10) -----------------------------------
@@ -209,29 +223,7 @@ def test_platforms_load(tmp_path):
     assert cfg.load_platforms(p).platforms == ["Twitter"]
 
 
-# --- multi-platform dispatch (P9, main.py:203-219) ------------------------------
-def test_platform_dispatch_union(spark):
-    from fanstats_producer_spark.sources.dispatch import PlatformRegistry
-
-    reg = PlatformRegistry()
-    reg.register("Twitter", lambda s: s.createDataFrame(
-        [("t1", "hello")], "id string, text string"))
-    reg.register("Reddit", lambda s: s.createDataFrame(
-        [("r1", "world", 5)], "id string, text string, upvotes int"))
-    out = reg.collect_all(spark, ["Twitter", "Reddit"])
-    rows = {r.id: (r.platform, r.upvotes) for r in out.collect()}
-    assert rows == {"t1": ("Twitter", None), "r1": ("Reddit", 5)}  # schema drift tolerated
-
-
-def test_platform_dispatch_unsupported(spark):
-    from fanstats_producer_spark.sources.dispatch import PlatformRegistry
-
-    reg = PlatformRegistry()
-    reg.register("Twitter", lambda s: s.range(1))
-    with pytest.raises(ValueError, match="platform not supported: 'Facebook'"):
-        reg.collect_all(spark, ["Facebook"])
-
-
+# --- Reddit and Facebook: page adapters on the shared scan (P9) ----------------
 def _fake_reddit(posts_per_sub: int):
     """Deterministic Reddit listing fake: pages of `kind: t3` envelopes
     with an `after` fullname cursor, plus one non-t3 child per page
@@ -269,7 +261,7 @@ def test_reddit_listing_pagination_and_envelope(spark):
     clamp, t3-envelope unwrap, epoch-seconds timestamps, result cap."""
     from fanstats_producer_spark.sources.reddit import RedditListingSource
 
-    src = RedditListingSource(spark, _fake_reddit(250), limit=500, max_posts=220)
+    src = RedditListingSource(spark, _fake_reddit(250), limit=500, max_rows=220)
     assert src.limit == 100  # clamped to Reddit's per-request max
     out = src.scan(["nba"]).collect()
     assert len(out) == 220  # cap enforced mid-listing (3 pages fetched)
@@ -305,7 +297,7 @@ def test_reddit_listing_liveness_and_row_tolerance(spark):
             )
         return [{"kind": "t1", "data": {"id": "noise"}}], "t3_cursor"
 
-    src = RedditListingSource(spark, hostile, max_posts=50)
+    src = RedditListingSource(spark, hostile, max_rows=50)
     out = {r.post_id: r for r in src.scan(["nba"]).collect()}
     assert calls["n"] <= 3  # zero-progress page broke the loop
     assert set(out) == {"ok", "bad"}
@@ -320,37 +312,8 @@ def test_reddit_listing_liveness_and_row_tolerance(spark):
             "t3_same",
         )
 
-    out2 = RedditListingSource(spark, repeater, max_posts=50).scan(["nba"])
+    out2 = RedditListingSource(spark, repeater, max_rows=50).scan(["nba"])
     assert out2.count() <= 2
-
-
-def test_reddit_collector_unions_with_twitter(spark):
-    """The normalized Reddit collector dispatches through
-    PlatformRegistry next to a Twitter-shaped collector: column names
-    align on id/text/created_at/author_id, platform-specific columns
-    null-fill across, and created_at is RFC-3339 like the Twitter arm."""
-    from fanstats_producer_spark.sources.dispatch import PlatformRegistry
-    from fanstats_producer_spark.sources.reddit import (
-        RedditListingSource,
-        collector,
-    )
-
-    reg = PlatformRegistry()
-    reg.register("Twitter", lambda s: s.createDataFrame(
-        [("t1", "hello", "2024-01-01T00:00:00.000Z", "a9")],
-        "id string, text string, created_at string, author_id string"))
-    src = RedditListingSource(spark, _fake_reddit(3))
-    reg.register("Reddit", collector(src, ["nba"]))
-    out = reg.collect_all(spark, ["Twitter", "Reddit"])
-    rows = {r.id: r for r in out.collect()}
-    assert len(rows) == 4
-    assert rows["t1"].platform == "Twitter" and rows["t1"].subreddit is None
-    r1 = rows["nba_1"]
-    assert r1.platform == "Reddit" and r1.subreddit == "nba"
-    assert r1.text == "post 1\n\nbody"  # title+selftext merge
-    assert rows["nba_2"].text == "post 2"  # empty selftext -> title only
-    assert r1.created_at.startswith("2023-11-14T") and r1.created_at.endswith("Z")
-    assert r1.author_id == "u1"
 
 
 def _fake_facebook(posts_per_page: int):
@@ -392,7 +355,7 @@ def test_facebook_feed_pagination_and_flatten(spark):
     timestamps, result cap."""
     from fanstats_producer_spark.sources.facebook import FacebookFeedSource
 
-    src = FacebookFeedSource(spark, _fake_facebook(250), limit=500, max_posts=220)
+    src = FacebookFeedSource(spark, _fake_facebook(250), limit=500, max_rows=220)
     assert src.limit == 100  # clamped to the Graph API per-request max
     out = src.scan(["espn"]).collect()
     assert len(out) == 220  # cap enforced mid-feed (3 pages fetched)
@@ -427,7 +390,7 @@ def test_facebook_feed_liveness_and_row_tolerance(spark):
             )
         return [{"no_id": True}], "cur:x"
 
-    src = FacebookFeedSource(spark, hostile, max_posts=50)
+    src = FacebookFeedSource(spark, hostile, max_rows=50)
     out = {r.post_id: r for r in src.scan(["espn"]).collect()}
     assert calls["n"] <= 3  # zero-progress page broke the loop
     assert set(out) == {"ok", "bad"}
@@ -437,36 +400,82 @@ def test_facebook_feed_liveness_and_row_tolerance(spark):
     def repeater(page_id, after, limit):
         return [{"id": f"p{len(after or '')}"}], "cur:same"
 
-    out2 = FacebookFeedSource(spark, repeater, max_posts=50).scan(["espn"])
+    out2 = FacebookFeedSource(spark, repeater, max_rows=50).scan(["espn"])
     assert out2.count() <= 2
 
 
-def test_three_platform_union(spark):
-    """Architecture.png's full planned source set: Twitter + Reddit +
-    Facebook collectors union by name through PlatformRegistry, each
-    platform's extra columns null-filling across the others, all
-    created_at values RFC-3339 Z-suffixed UTC."""
-    from fanstats_producer_spark.sources.dispatch import PlatformRegistry
+def _land_platforms(spark, tmp_path, extra_collectors):
+    """Run run_pipeline's own dispatch over Twitter (the demo fetcher:
+    3 pages x 25 tweets) plus `extra_collectors`, then read the lake back
+    by name with mergeSchema, keyed by id."""
+    import datetime
+
+    from fanstats_producer_spark.pipeline import demo_fetcher, run_pipeline
+
+    names = ["Twitter", *extra_collectors]
+    data = _write_yaml(tmp_path / "nba.yaml", "version: 1.0\n---\nTopic: NBA\nType: League\n")
+    plats = _write_yaml(
+        tmp_path / "platforms.yaml",
+        "version: 1.0\n---\nPlatforms:\n" + "".join(f"  - {n}\n" for n in names),
+    )
+    out = str(tmp_path / "lake")
+    wrote = run_pipeline(
+        spark, data, plats, out,
+        fetch_page=demo_fetcher(),
+        now=datetime.datetime(2024, 1, 16, 5, 0, tzinfo=datetime.timezone.utc),
+        extra_collectors=extra_collectors,
+    )
+    assert wrote == {n: True for n in names}
+    lake = spark.read.option("mergeSchema", True).json(out)
+    return {r.id: r for r in lake.collect()}
+
+
+def test_reddit_collector_unions_with_twitter(spark, tmp_path):
+    """The normalized Reddit collector lands through run_pipeline next
+    to the Twitter arm: column names align on id/text/created_at/
+    author_id, Reddit's extra columns null-fill on tweet rows, and
+    created_at is RFC-3339 like the Twitter arm."""
+    from fanstats_producer_spark.sources import reddit
+
+    rows = _land_platforms(spark, tmp_path, {
+        "Reddit": lambda s: reddit.normalize_posts(
+            reddit.RedditListingSource(s, _fake_reddit(3)).scan(["nba"])),
+    })
+    assert len(rows) == 75 + 3
+    t1 = rows["1"]
+    assert t1.platform == "Twitter" and t1.created_at == "2024-01-15T12:00:00.000Z"
+    assert t1.subreddit is None
+    r1 = rows["nba_1"]
+    assert r1.platform == "Reddit" and r1.subreddit == "nba"
+    assert r1.text == "post 1\n\nbody"  # title+selftext merge
+    assert rows["nba_2"].text == "post 2"  # empty selftext -> title only
+    assert r1.created_at.startswith("2023-11-14T") and r1.created_at.endswith("Z")
+    assert r1.author_id == "u1"
+
+
+def test_three_platform_union(spark, tmp_path):
+    """Architecture.png's full planned source set through run_pipeline's
+    own dispatch: Twitter, Reddit and Facebook land in one lake and read
+    back by name with mergeSchema, each platform's extra columns
+    null-filling on the others' rows, every created_at RFC-3339 UTC."""
     from fanstats_producer_spark.sources import facebook, reddit
 
-    reg = PlatformRegistry()
-    reg.register("Twitter", lambda s: s.createDataFrame(
-        [("t1", "hello", "2024-01-01T00:00:00.000Z", "a9")],
-        "id string, text string, created_at string, author_id string"))
-    reg.register("Reddit", reddit.collector(
-        reddit.RedditListingSource(spark, _fake_reddit(2)), ["nba"]))
-    reg.register("Facebook", facebook.collector(
-        facebook.FacebookFeedSource(spark, _fake_facebook(2)), ["espn"]))
-    out = reg.collect_all(spark, ["Twitter", "Reddit", "Facebook"])
-    rows = {r.id: r for r in out.collect()}
-    assert len(rows) == 5
+    rows = _land_platforms(spark, tmp_path, {
+        "Reddit": lambda s: reddit.normalize_posts(
+            reddit.RedditListingSource(s, _fake_reddit(2)).scan(["nba"])),
+        "Facebook": lambda s: facebook.normalize_posts(
+            facebook.FacebookFeedSource(s, _fake_facebook(2)).scan(["espn"])),
+    })
+    assert len(rows) == 75 + 2 + 2
+    t1 = rows["1"]
+    assert t1.subreddit is None and t1.page is None and t1.shares is None
+    assert rows["nba_1"].shares is None and rows["nba_1"].page is None
     fb = rows["espn_1"]
     assert fb.platform == "Facebook" and fb.page == "espn"
     assert fb.text == "update 1" and fb.author_id == "pg1"
     assert fb.reactions == 2 and fb.subreddit is None
     # +0000 offset parsed as a real instant, re-rendered in UTC
     assert fb.created_at == "2024-03-05T08:30:00.000Z"
-    assert rows["t1"].page is None and rows["nba_1"].shares is None
 
 
 def test_corrupt_records_tolerated(spark, tmp_path):

@@ -117,6 +117,66 @@ def test_rest_datasource_cap_mid_page(spark):
     assert df.count() == 30
 
 
+@pytest.mark.parametrize(
+    "fetcher", ["empty_pages_same_cursor", "empty_pages_fresh_cursor"]
+)
+def test_rest_datasource_ends_on_empty_pages(spark, fetcher):
+    """The batch reader walks the shared cursor loop, so an empty page
+    behind a live cursor ends each topic's chain (the fake raises after
+    20 requests: a reader without the guard fails instead of hanging)."""
+    rest_datasource.register(spark)
+    df = (
+        spark.read.format("fanstats_rest")
+        .option("topics", "NBA,NFL")
+        .option("fetcher", f"tests.fetchers:{fetcher}")
+        .load()
+    )
+    assert df.collect() == []
+
+
+def _assert_api_v2_fields(rows):
+    """tests.fetchers.api_v2_objects landed by field name: its
+    public_metrics keys come in another order than TWEET_SCHEMA's, and
+    its entities object holds only hashtags."""
+    assert len(rows) == 6
+    for r in rows:
+        assert r.public_metrics.asDict() == {
+            "retweet_count": 1, "reply_count": 2, "like_count": 7, "quote_count": 3,
+        }
+        assert [h.tag for h in r.entities.hashtags] == ["nba"]
+        assert r.entities.mentions is None and r.context_annotations is None
+
+
+def test_rest_datasource_maps_nested_fields_by_name(spark):
+    rest_datasource.register(spark)
+    df = (
+        spark.read.format("fanstats_rest")
+        .option("topics", "NBA")
+        .option("fetcher", "tests.fetchers:api_v2_objects")
+        .load()
+    )
+    _assert_api_v2_fields(df.collect())
+
+
+def test_rest_stream_source_maps_nested_fields_by_name(spark, tmp_path):
+    rest_datasource.register(spark)
+    out = str(tmp_path / "out")
+    q = (
+        spark.readStream.format("fanstats_rest")
+        .option("topics", "NBA")
+        .option("fetcher", "tests.fetchers:api_v2_objects")
+        .option("pages_per_batch", "2")
+        .load()
+        .writeStream.format("parquet")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .option("path", out)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    _assert_api_v2_fields(spark.read.parquet(out).collect())
+
+
 def test_landed_data_supports_athena_style_analytics(spark, configs, tmp_path):
     """The full reference loop: produce → land → analyze.  The analytics
     the reference delegates to Athena (engagement rollups over the

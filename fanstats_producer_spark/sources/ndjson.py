@@ -249,8 +249,3 @@ def write_partitioned(
     )
     return True
 
-
-def lookback_filter(df: DataFrame, days: int = 1, ts_col: str = "created_at") -> DataFrame:
-    """The 24-hour lookback bound (P3, main.py:262-263) generalized."""
-    ts = F.to_timestamp(F.col(ts_col))
-    return df.filter(ts >= F.current_timestamp() - F.expr(f"INTERVAL {days} DAY"))

@@ -37,23 +37,10 @@ from pyspark.sql.datasource import (
 from fanstats_producer_spark.sources.ndjson import TWEET_SCHEMA, arrow_table
 from fanstats_producer_spark.sources.rest import FetchPage, PaginatedSource, iter_chain
 
-# Name → fetcher factory.  Module-level so executor-side deserialization
-# can resolve it by name (options travel as strings).
+# Name → fetcher factory.  Module-level and filled at import time, so
+# executor-side deserialization can resolve it by name in any worker
+# process (options travel as strings).
 FETCHERS: dict[str, Callable[[], FetchPage]] = {}
-
-
-def register_fetcher(name: str, factory: Callable[[], FetchPage]) -> None:
-    """Register a named fetcher factory IN THIS PROCESS.
-
-    Note the Python DataSource lifecycle: readers are constructed in a
-    plan-time Python worker and executed on executor workers, both of
-    which import this module fresh — a runtime registration in the
-    driver process is NOT visible there.  Use this for factories
-    registered at module import time (e.g. from a package every worker
-    imports); for everything else pass the fetcher option as an
-    importable "module.path:attr" spec, which resolves anywhere.
-    """
-    FETCHERS[name] = factory
 
 
 def _resolve_fetcher(spec: str) -> Callable[[], FetchPage]:
@@ -207,11 +194,67 @@ class _StagedUpload(WriterCommitMessage):
         self.n_rows = n_rows
 
 
-class UploadWriter(DataSourceWriter):
+def _promote(
+    messages, dest: str, part_name: Callable[[int], str], manifest: str, **fields
+) -> None:
+    """Driver-side commit shared by every writer: move each staged part
+    into `dest` under part_name(i), then write the `manifest` file with
+    `fields` plus the row and file counts.  A task that staged zero rows
+    is the reference's empty-result guard (main.py:183-194): nothing to
+    upload -> no object created."""
+    import json as _json
+    import os
+
+    total = 0
+    part = 0
+    for m in messages:
+        if m is None:
+            continue
+        if m.n_rows == 0:
+            os.remove(m.staged)
+            continue
+        os.replace(m.staged, os.path.join(dest, part_name(part)))
+        part += 1
+        total += m.n_rows
+    with open(os.path.join(dest, manifest), "w") as f:
+        f.write(_json.dumps({**fields, "rows": total, "files": part}))
+
+
+def _abort(messages) -> None:
+    """Remove whatever the tasks staged; nothing reaches `dest`."""
+    import os
+
+    for m in messages:
+        if m is not None and os.path.exists(m.staged):
+            os.remove(m.staged)
+
+
+class _JobCommit:
+    """Job-level commit/abort for the batch writers, which differ only in
+    what a task stages (`ext` names the part files)."""
+
+    ext = "json"
+
     def __init__(self, options: dict, overwrite: bool) -> None:
         self.dest = options["dest"]
         self.overwrite = overwrite
 
+    def commit(self, messages) -> None:
+        import os
+
+        if self.overwrite:
+            for name in os.listdir(self.dest):
+                if name.startswith("part-") or name == "_SUCCESS":
+                    os.remove(os.path.join(self.dest, name))
+        _promote(
+            messages, self.dest, lambda i: f"part-{i:05d}.{self.ext}", "_SUCCESS"
+        )
+
+    def abort(self, messages) -> None:
+        _abort(messages)
+
+
+class UploadWriter(_JobCommit, DataSourceWriter):
     def write(self, iterator) -> _StagedUpload:
         import json as _json
         import os
@@ -226,37 +269,6 @@ class UploadWriter(DataSourceWriter):
                 f.write(_json.dumps(row.asDict(recursive=True), default=str) + "\n")
                 n += 1
         return _StagedUpload(staged=path, n_rows=n)
-
-    def commit(self, messages) -> None:
-        import json as _json
-        import os
-
-        if self.overwrite:
-            for name in os.listdir(self.dest):
-                if name.startswith("part-") or name == "_SUCCESS":
-                    os.remove(os.path.join(self.dest, name))
-        total = 0
-        part = 0
-        for m in messages:
-            if m is None:
-                continue
-            if m.n_rows == 0:
-                # the reference's empty-result guard (main.py:183-194):
-                # nothing to upload -> no object created
-                os.remove(m.staged)
-                continue
-            os.replace(m.staged, os.path.join(self.dest, f"part-{part:05d}.json"))
-            part += 1
-            total += m.n_rows
-        with open(os.path.join(self.dest, "_SUCCESS"), "w") as f:
-            f.write(_json.dumps({"rows": total, "files": part}))
-
-    def abort(self, messages) -> None:
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.staged):
-                os.remove(m.staged)
 
 
 class UploadStreamWriter(DataSourceStreamWriter):
@@ -274,7 +286,6 @@ class UploadStreamWriter(DataSourceStreamWriter):
 
     def commit(self, messages, batchId: int) -> None:
         import glob
-        import json as _json
         import os
 
         # A replayed batch may produce fewer parts than a previously
@@ -285,42 +296,26 @@ class UploadStreamWriter(DataSourceStreamWriter):
             os.path.join(self.dest, f"batch-{batchId:05d}-part-*")
         ) + glob.glob(os.path.join(self.dest, f"_batch-{batchId:05d}.manifest")):
             os.remove(stale)
-
-        total = 0
-        part = 0
-        for m in messages:
-            if m is None:
-                continue
-            if m.n_rows == 0:
-                os.remove(m.staged)
-                continue
-            os.replace(
-                m.staged,
-                os.path.join(self.dest, f"batch-{batchId:05d}-part-{part:05d}.json"),
-            )
-            part += 1
-            total += m.n_rows
-        with open(os.path.join(self.dest, f"_batch-{batchId:05d}.manifest"), "w") as f:
-            f.write(_json.dumps({"batch": batchId, "rows": total, "files": part}))
+        _promote(
+            messages,
+            self.dest,
+            lambda i: f"batch-{batchId:05d}-part-{i:05d}.json",
+            f"_batch-{batchId:05d}.manifest",
+            batch=batchId,
+        )
 
     def abort(self, messages, batchId: int) -> None:
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.staged):
-                os.remove(m.staged)
+        _abort(messages)
 
 
-class UploadArrowWriter(DataSourceArrowWriter):
+class UploadArrowWriter(_JobCommit, DataSourceArrowWriter):
     """Arrow-batch arm of the committing sink: tasks receive PyArrow
     RecordBatches (zero per-row Python objects — the Arrow columnar
     transfer the row writer pays per-Row conversion for) and stage one
     parquet file per task; the commit/abort protocol is shared with
     UploadWriter.  Select with option("format", "arrow-parquet")."""
 
-    def __init__(self, options: dict, overwrite: bool) -> None:
-        self.dest = options["dest"]
-        self.overwrite = overwrite
+    ext = "parquet"
 
     def write(self, iterator) -> _StagedUpload:
         import os
@@ -346,32 +341,3 @@ class UploadArrowWriter(DataSourceArrowWriter):
         else:
             writer.close()
         return _StagedUpload(staged=path, n_rows=n)
-
-    def commit(self, messages) -> None:
-        import json as _json
-        import os
-
-        if self.overwrite:
-            for name in os.listdir(self.dest):
-                if name.startswith("part-") or name == "_SUCCESS":
-                    os.remove(os.path.join(self.dest, name))
-        total = 0
-        part = 0
-        for m in messages:
-            if m is None:
-                continue
-            if m.n_rows == 0:
-                os.remove(m.staged)
-                continue
-            os.replace(m.staged, os.path.join(self.dest, f"part-{part:05d}.parquet"))
-            part += 1
-            total += m.n_rows
-        with open(os.path.join(self.dest, "_SUCCESS"), "w") as f:
-            f.write(_json.dumps({"rows": total, "files": part}))
-
-    def abort(self, messages) -> None:
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.staged):
-                os.remove(m.staged)

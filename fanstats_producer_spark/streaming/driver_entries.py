@@ -13,19 +13,37 @@ exactly.  What the oracle cannot state — watermark eviction across
 micro-batches, state recovery — stays pytest-verified with multi-batch
 file streams in tests/test_streaming.py.
 
-Everything is bounded: sinks and checkpoints live in fresh temp dirs,
-output rows are per-key / per-window aggregates (never the raw event
-echo), and each call uses its own memory-sink name so repeated driver
-invocations don't collide.
-"""
+How a key declares its drain: it builds its source and transform, then
+hands them to ONE of two helpers, which own the conf scope, the sink,
+the await and the cleanup.
 
+- `_drain_to_memory(spark, stream, mode, skip_nodata=...)` — the
+  AvailableNow memory sink; returns the sink's rows as a batch frame
+  and drops the sink's temp view, so repeated calls leave nothing in
+  the session catalog.
+- `_drain_to_dir(spark, prefix, start, read, skip_nodata=...)` — for
+  jobs that write files (foreachBatch state tables, file sinks):
+  `start(work)` starts the query under one fresh scratch dir, `read(work)`
+  reads the result back, which is materialised before the dir is
+  removed.
+
+`skip_nodata` is required on both: skipping the trailing no-data
+micro-batch is a correctness decision per key (`_skip_nodata_batch`),
+never a default.  `partitions` (8 unless a key measured otherwise) and
+`rocksdb` are the other per-key confs.
+"""
 from __future__ import annotations
 
+import atexit
 import contextlib
+import os
+import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from fanstats_producer_spark.functions.chunking import _CHUNK, _STRIDE
 from fanstats_producer_spark.functions.num import sql_dsum_pos
@@ -92,45 +110,67 @@ def _skip_nodata_batch(spark: SparkSession):
         )
 
 
+@contextlib.contextmanager
+def _rocksdb_state(spark: SparkSession):
+    """Run the enclosed drain on the RocksDB state store provider — the
+    production backend once state outgrows the JVM heap (the default
+    HDFS-backed store keeps every version's map IN MEMORY per executor;
+    RocksDB spills to local SSD and bounds memory, which is the only
+    viable posture for 100 TB keyed state).  Results are provider-
+    independent — only the storage engine changes."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key)
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _fixture_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-stream source over one fixture table.  The fixture ships as
+    a single file and the file-stream source requires a directory
+    landing zone, so the file is staged into a fresh dir by hard link
+    (fallback copy) — zero data movement, and the stream sees it as one
+    arriving file.  The schema comes from a static read so the stream
+    never infers.  The dir must outlive this call (the caller drains
+    later), so removal defers to interpreter exit — bounds scratch
+    growth across a long bench/driver session without racing any
+    in-flight stream."""
+    path = f"{sf_dir}/{table}.parquet"
+    schema = spark.read.parquet(path).schema
+    landing = scratch_dir(f"{table}_landing_")
+    atexit.register(shutil.rmtree, landing, ignore_errors=True)
+    dst = os.path.join(landing, f"{table}-000.parquet")
+    try:
+        os.link(path, dst)
+    except OSError:
+        shutil.copy(path, dst)
+    return spark.readStream.schema(schema).parquet(landing)
+
+
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream source over the fixture events table (s01's P1-made-
-    continuous source, parquet flavor).  The fixture ships as a single
-    file and the file-stream source requires a directory landing zone,
-    so the file is staged into a temp dir by hard link (fallback copy) —
-    zero data movement, and the stream sees it as one arriving file.
-    The schema comes from a static read so the stream never infers."""
-    import os
-    import shutil
-
+    continuous source, parquet flavor), ts normalized to TIMESTAMP."""
     from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
 
     from fanstats_producer_spark.io import load as _load
 
-    path = f"{sf_dir}/events.parquet"
     # Validate on the batch side FIRST: io.load raises on unrecognized or
     # magnitude-implausible ts types, so reaching the stream read means
     # the raw type is one of the three known fixture flavors — and the
     # session confs (UTC, nanosAsLong) it pins also govern this stream.
     _load(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
-    landing = scratch_dir("s_landing_")
-    # the dir must outlive this call (the caller drains later), so defer
-    # removal to interpreter exit — bounds /tmp growth across a long
-    # bench/driver session without racing any in-flight stream
-    import atexit
-
-    atexit.register(shutil.rmtree, landing, ignore_errors=True)
-    dst = os.path.join(landing, "events-000.parquet")
-    try:
-        os.link(path, dst)
-    except OSError:
-        shutil.copy(path, dst)
-    stream = spark.readStream.schema(schema).parquet(landing)
+    stream = _fixture_stream(spark, sf_dir, "events")
     # Mirror io.load's normalization exactly (event-time ops need
     # TIMESTAMP): TIMESTAMP(NANOS) reads as long under nanosAsLong —
     # integer div to micros, NOT cast('timestamp') which would interpret
     # the long as epoch SECONDS and silently corrupt every drain.
-    ts_type = schema["ts"].dataType
+    ts_type = stream.schema["ts"].dataType
     if isinstance(ts_type, LongType):
         return stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     if isinstance(ts_type, TimestampNTZType):
@@ -158,8 +198,6 @@ def _fixture_cache_key(sf_dir: str) -> tuple:
     fixture into the same directory mid-session (gen_sf.py) invalidates
     the staged landings / collected shingles instead of silently serving
     stale content (ADVICE r9).  Stat of one file — no data read."""
-    import os
-
     path = os.path.abspath(sf_dir)
     doc = os.path.join(path, "documents.parquet")
     try:
@@ -180,10 +218,7 @@ def _stage_parity_landing(spark: SparkSession, sf_dir: str) -> str:
     source orders them.  Used by s25 (Bloom dedup) and s27 (packing);
     cached per sf_dir (read-only after staging — each key's
     state/checkpoint dirs stay private under its own `work`)."""
-    import atexit
     import glob as _glob
-    import os
-    import shutil
 
     from fanstats_producer_spark.io import load as _load
 
@@ -242,10 +277,6 @@ def _doc_landing(spark: SparkSession, sf_dir: str) -> str:
     The dir is read-only after staging; per-key state/checkpoint dirs
     stay private.  Removal defers to interpreter exit so no in-flight
     stream races the cleanup."""
-    import atexit
-    import os
-    import shutil
-
     from fanstats_producer_spark.io import load as _load
 
     key = _fixture_cache_key(sf_dir)
@@ -277,10 +308,100 @@ def _doc_landing(spark: SparkSession, sf_dir: str) -> str:
     return landing
 
 
-def _drain(q) -> None:
-    """Run an AvailableNow query to completion (drain everything, then
-    stop — the reference's batch cadence, main.tf:217)."""
-    q.awaitTermination()
+@contextlib.contextmanager
+def _drain_scope(
+    spark: SparkSession, partitions: int | None, skip_nodata: bool, rocksdb: bool
+):
+    """The one conf scope every drain runs under: `partitions` shuffle
+    partitions (None leaves the session's), the no-data-batch skip and
+    the RocksDB provider, each restored on exit."""
+    with contextlib.ExitStack() as scope:
+        if partitions is not None:
+            scope.enter_context(_few_partitions(spark, partitions))
+        if skip_nodata:
+            scope.enter_context(_skip_nodata_batch(spark))
+        if rocksdb:
+            scope.enter_context(_rocksdb_state(spark))
+        yield
+
+
+def _drain_to_memory(
+    spark: SparkSession,
+    stream: DataFrame,
+    mode: str,
+    *,
+    skip_nodata: bool,
+    partitions: int = 8,
+    rocksdb: bool = False,
+) -> DataFrame:
+    """Drain `stream` through an AvailableNow memory sink in output mode
+    `mode` (drain everything, then stop — the reference's batch cadence,
+    main.tf:217) and return the sink's rows as a batch frame.  The frame
+    is bound to the sink itself, so the temp view the sink registers is
+    dropped before returning: left in place, every drain would keep one
+    view, and its rows on the driver, for the life of the session."""
+    name = f"drain_mem_{uuid.uuid4().hex[:8]}"
+    try:
+        with _drain_scope(spark, partitions, skip_nodata, rocksdb):
+            (
+                stream.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def _drain_to_dir(
+    spark: SparkSession,
+    prefix: str,
+    start: Callable[[str], StreamingQuery],
+    read: Callable[[str], DataFrame],
+    *,
+    skip_nodata: bool,
+    partitions: int | None = 8,
+    data_batches: tuple[int, ...] | None = None,
+) -> DataFrame:
+    """Drain a query that writes files: `start(work)` starts it under one
+    fresh scratch dir (sink output, state and checkpoint all live in
+    `work`), the drain runs to completion, and `read(work)` is
+    materialised before the dir is removed.  `data_batches` states a
+    key's oracle precondition on how many data micro-batches the drain
+    may take; any other count fails loudly instead of returning rows the
+    oracle no longer describes."""
+    work = scratch_dir(prefix)
+    try:
+        with _drain_scope(spark, partitions, skip_nodata, False):
+            q = start(work)
+            q.awaitTermination()
+        if data_batches is not None:
+            n = sum(p["numInputRows"] > 0 for p in q.recentProgress)
+            if n not in data_batches:
+                raise AssertionError(
+                    f"{prefix.rstrip('_')} oracle assumes {data_batches} data"
+                    f" micro-batches; observed {n} — a trigger or landing"
+                    " change broke the equivalence precondition"
+                )
+        return read(work).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _require_protobuf(spark: SparkSession) -> None:
+    """transformWithStateInPandas (s10, s10b) speaks protobuf between
+    the JVM and Python; fail with the remedy when no runtime is found."""
+    from fanstats_producer_spark.compat import ensure_protobuf
+
+    if not ensure_protobuf(spark):
+        raise RuntimeError(
+            "transformWithStateInPandas needs google.protobuf; install "
+            "protobuf or provide the Cloud SDK vendored runtime "
+            "(see fanstats_producer_spark/compat.py)"
+        )
 
 
 @query(
@@ -295,15 +416,24 @@ def s01_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exactly-once), then summarize the landed layout.  Returns one row
     per event_date partition with its row count — the sink's manifest,
     not the raw echo, so the result stays tiny at any scale."""
-    tmp = scratch_dir("s01_")
-    out, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
     stream = _read_events_stream(spark, sf_dir)
-    _drain(jobs.write_partitioned_stream(stream, out, ckpt))
-    return (
-        spark.read.parquet(out)
-        .groupBy("event_date")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("event_date").cast("string").alias("event_date"), "n")
+    # no conf scope: the sink's repartition("event_date") shuffle runs on
+    # the session's partitions, and the summary is materialised before
+    # the work dir (sink output + checkpoint) is removed
+    return _drain_to_dir(
+        spark,
+        "s01_",
+        lambda work: jobs.write_partitioned_stream(
+            stream, f"{work}/out", f"{work}/ckpt"
+        ),
+        lambda work: (
+            spark.read.parquet(f"{work}/out")
+            .groupBy("event_date")
+            .agg(F.count("*").alias("n"))
+            .select(F.col("event_date").cast("string").alias("event_date"), "n")
+        ),
+        skip_nodata=False,
+        partitions=None,
     )
 
 
@@ -321,22 +451,12 @@ def s05_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds window state; update mode emits each window's running result
     per micro-batch, so the drained table holds the final per-window
     aggregates after AvailableNow finishes."""
-    name = f"s05_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     counts = jobs.windowed_counts(
         stream, window="1 day", watermark="30 minutes"
     )
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
     return (
-        spark.table(name)
+        _drain_to_memory(spark, counts, "update", skip_nodata=True)
         .groupBy(
             F.date_format("start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "event_type",
@@ -360,20 +480,9 @@ def s07_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s07: applyInPandasWithState per-user running totals, drained via
     AvailableNow into a memory sink.  One output row per user per batch;
     the last emission per user is the final running total."""
-    name = f"s07_mem_{uuid.uuid4().hex[:8]}"
-    stream = _read_events_stream(spark, sf_dir)
-    totals = jobs.user_running_totals(stream)
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
+    totals = jobs.user_running_totals(_read_events_stream(spark, sf_dir))
     return (
-        spark.table(name)
+        _drain_to_memory(spark, totals, "update", skip_nodata=True)
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -399,22 +508,12 @@ def s08_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same event stream, time-bounded state), drained in append mode;
     the per-day pair counts equal the batch time-conditioned self-join
     the oracle states."""
-    name = f"s08_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     joined = jobs.clicks_to_purchases_join(stream, horizon="1 hour")
     # Stream-stream joins keep TWO per-partition state stores; see
     # _few_partitions.
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
     return (
-        spark.table(name)
+        _drain_to_memory(spark, joined, "append", skip_nodata=True)
         .groupBy(
             F.col("purchase_ts").cast("date").cast("string").alias("purchase_date")
         )
@@ -461,20 +560,10 @@ def s17_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     final 2-hour watermark delay stay in state and are deliberately
     absent from the null counts, which the oracle states exactly;
     matched pairs emit regardless (the inner part)."""
-    name = f"s17_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     joined = jobs.clicks_to_purchases_join(stream, horizon="1 hour", how="leftOuter")
-    with _few_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
     return (
-        spark.table(name)
+        _drain_to_memory(spark, joined, "append", skip_nodata=False)
         .groupBy(
             F.col("purchase_ts").cast("date").cast("string").alias("purchase_date")
         )
@@ -521,22 +610,12 @@ def s18_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     across both join inputs' watermark operators); the trailing
     windows stay in the aggregation's state and are absent.  Needs the
     trailing no-data tick (no _skip_nodata_batch)."""
-    name = f"s18_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     joined = jobs.clicks_to_purchases_join(stream, horizon="1 hour")
     counts = joined.groupBy(
         F.window("purchase_ts", "6 hours").alias("w")
     ).agg(F.count("*").alias("n_pairs"))
-    with _few_partitions(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(name).select(
+    return _drain_to_memory(spark, counts, "append", skip_nodata=False).select(
         F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "n_pairs",
     )
@@ -557,16 +636,19 @@ def s09_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest-event-per-user state table after the drain equals the batch
     argmax the oracle states (ties broken by event_id, so the merge is
     deterministic across any batching)."""
-    tmp = scratch_dir("s09_")
-    state, ckpt = f"{tmp}/state", f"{tmp}/ckpt"
     stream = _read_events_stream(spark, sf_dir)
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        _drain(jobs.upsert_latest_per_key(stream, state, ckpt))
-    latest = spark.read.parquet(state)
-    return latest.select(
-        "user_id",
-        F.col("event_id").alias("last_event_id"),
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
+    return _drain_to_dir(
+        spark,
+        "s09_",
+        lambda work: jobs.upsert_latest_per_key(
+            stream, f"{work}/state", f"{work}/ckpt"
+        ),
+        lambda work: spark.read.parquet(f"{work}/state").select(
+            "user_id",
+            F.col("event_id").alias("last_event_id"),
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
+        ),
+        skip_nodata=True,
     )
 
 
@@ -596,17 +678,8 @@ def s10_tws_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     (floor(value*1e6+0.5); values are nonnegative in this schema so
     pandas' truncating astype('int64') IS floor), so the totals are
     arrival-order-free and the batch SQL states them bit-exactly."""
-    from fanstats_producer_spark.compat import ensure_protobuf
-
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf; install "
-            "protobuf or provide the Cloud SDK vendored runtime "
-            "(see fanstats_producer_spark/compat.py)"
-        )
-    name = f"s10_mem_{uuid.uuid4().hex[:8]}"
-    stream = _read_events_stream(spark, sf_dir)
-    totals = jobs.user_value_stats_tws(stream)
+    _require_protobuf(spark)
+    totals = jobs.user_value_stats_tws(_read_events_stream(spark, sf_dir))
     # TWS requires the RocksDB provider.  n=8, NOT the s15 n=2: unlike
     # the JVM-side stateful operators, every TWS state call is a
     # synchronous per-key proto round-trip through that partition's
@@ -615,26 +688,14 @@ def s10_tws_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     # / n=16 3.8s — RocksDB per-store setup wins below 8, socket
     # parallelism above).  timeMode="None" → no timer path depends on
     # the trailing no-data tick, so the skip is output-safe.
-    with _few_partitions(spark, 8), _skip_nodata_batch(spark), _rocksdb_state(
-        spark
-    ):
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
+    drained = _drain_to_memory(
+        spark, totals, "update", skip_nodata=True, partitions=8, rocksdb=True
+    )
     # One emission per user per micro-batch of running totals; the max
     # per user is the final state (counts/totals only grow).
-    return (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("total_value_e6").alias("total_value_e6"),
-        )
+    return drained.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max("total_value_e6").alias("total_value_e6"),
     )
 
 
@@ -662,30 +723,14 @@ def s10b_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     this drain therefore runs WITHOUT _skip_nodata_batch (the s16
     rule).  Users still active within 40 min of stream end stay open
     and are deliberately absent, which the oracle states exactly."""
-    from fanstats_producer_spark.compat import ensure_protobuf
-
-    if not ensure_protobuf(spark):
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf; install "
-            "protobuf or provide the Cloud SDK vendored runtime "
-            "(see fanstats_producer_spark/compat.py)"
-        )
-    name = f"s10b_mem_{uuid.uuid4().hex[:8]}"
-    stream = _read_events_stream(spark, sf_dir)
+    _require_protobuf(spark)
     closed = jobs.user_session_close_tws(
-        stream, gap_seconds=1800, watermark="10 minutes"
+        _read_events_stream(spark, sf_dir), gap_seconds=1800, watermark="10 minutes"
     )
     # n=8: socket-parallel TWS protocol (see s10's measurement note).
-    with _few_partitions(spark, 8), _rocksdb_state(spark):
-        q = (
-            closed.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(name)
+    return _drain_to_memory(
+        spark, closed, "append", skip_nodata=False, partitions=8, rocksdb=True
+    )
 
 
 @query(
@@ -702,21 +747,11 @@ def s11_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives is arrival-order-dependent, so the oracle states the
     deterministic part: input size and the number of kept (distinct-
     content) rows."""
-    name = f"s11_mem_{uuid.uuid4().hex[:8]}"
-    stream = _read_events_stream(spark, sf_dir)
-    deduped = jobs.deduped_by_content(stream, text_col="props")
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    kept = spark.table(name)
     from fanstats_producer_spark.io import load as _load
 
+    stream = _read_events_stream(spark, sf_dir)
+    deduped = jobs.deduped_by_content(stream, text_col="props")
+    kept = _drain_to_memory(spark, deduped, "append", skip_nodata=True)
     total = _load(spark, sf_dir, "events").count()
     return kept.agg(
         F.lit(total).cast("long").alias("n_input"), F.count("*").alias("n_kept")
@@ -757,19 +792,9 @@ def s04b_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions).  Equals the batch gap-and-island sessionization the
     oracle states; cross-batch merging is pytest-verified
     (tests/test_streaming.py::test_session_window_stream)."""
-    name = f"s04b_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     sessions = jobs.sessionized(stream, gap="30 minutes")
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(name).select(
+    return _drain_to_memory(spark, sessions, "complete", skip_nodata=True).select(
         "user_id",
         F.date_format("start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
         F.date_format("end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
@@ -823,20 +848,9 @@ def s12_stream_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # maxFilesPerTrigger drains every staged part file in ONE
     # micro-batch, so the 30-min watermark never drops rows regardless
     # of part-file order.
-    landing = _doc_landing(spark, sf_dir)
-    name = f"s12_mem_{uuid.uuid4().hex[:8]}"
-    stream = jobs.read_document_stream(spark, landing)
+    stream = jobs.read_document_stream(spark, _doc_landing(spark, sf_dir))
     prepped = jobs.corpus_prep_stream(stream)
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            prepped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    t = spark.table(name)
+    t = _drain_to_memory(spark, prepped, "append", skip_nodata=True)
     return t.agg(
         F.countDistinct("doc_id").alias("n_docs"),
         F.count("*").alias("n_chunks"),
@@ -870,47 +884,16 @@ def s16_append_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial window(s) stay in state and are deliberately ABSENT from
     the result — exactly-once emission, not completeness, is append
     mode's contract."""
-    name = f"s16_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     counts = jobs.windowed_counts(
         stream, window="1 hour", watermark="30 minutes"
     )
-    with _few_partitions(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(name).select(
+    return _drain_to_memory(spark, counts, "append", skip_nodata=False).select(
         F.date_format("start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
         "n",
         "sum_value",
     )
-
-
-@contextlib.contextmanager
-def _rocksdb_state(spark: SparkSession):
-    """Run the enclosed drain on the RocksDB state store provider — the
-    production backend once state outgrows the JVM heap (the default
-    HDFS-backed store keeps every version's map IN MEMORY per executor;
-    RocksDB spills to local SSD and bounds memory, which is the only
-    viable posture for 100 TB keyed state).  Results are provider-
-    independent — only the storage engine changes."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 @query(
@@ -928,30 +911,19 @@ def s15_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercised drain, not just a config note: at 100 TB the HDFS-backed
     default is an OOM, and this entry proves the engine runs unchanged
     on the spill-to-disk provider."""
-    name = f"s15_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir)
     counts = jobs.windowed_counts(stream, window="1 day", watermark="30 minutes")
     # n=2, not the drain-default 8: RocksDB pays a native DB instance +
     # snapshot upload PER partition per batch (measured 12 s at n=8 vs
     # ~1 s at n=2 for identical results) — at 100 TB that per-partition
     # cost amortizes over real state and the knob goes back up.
-    with _few_partitions(spark, 2), _skip_nodata_batch(spark), _rocksdb_state(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return (
-        spark.table(name)
-        .groupBy(
-            F.date_format("start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-        )
-        .agg(F.max("n").alias("n"), F.max("sum_value").alias("sum_value"))
+    drained = _drain_to_memory(
+        spark, counts, "update", skip_nodata=True, partitions=2, rocksdb=True
     )
+    return drained.groupBy(
+        F.date_format("start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+        "event_type",
+    ).agg(F.max("n").alias("n"), F.max("sum_value").alias("sum_value"))
 
 
 @query(
@@ -981,7 +953,6 @@ def s19_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fanstats_producer_spark.functions.num import dsum_pos
     from fanstats_producer_spark.io import load
 
-    name = f"s19_mem_{uuid.uuid4().hex[:8]}"
     stream = _read_events_stream(spark, sf_dir).where(
         F.col("event_type") == "purchase"
     )
@@ -992,19 +963,10 @@ def s19_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         dsum_pos("value").alias("sum_value"),
     )
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
     # update mode re-emits a key each batch it changes in; both
     # aggregates are monotone over positive inputs, so max = final.
     return (
-        spark.table(name)
+        _drain_to_memory(spark, agg, "update", skip_nodata=True)
         .groupBy("segment", "nation")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -1035,13 +997,9 @@ def s20_union_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics a multi-source production ingest relies on.  Drained in
     update mode; the final emission per key equals the batch aggregate
     over both event types."""
-    import os
-    import shutil
-
     from fanstats_producer_spark.functions.num import dsum_pos
     from fanstats_producer_spark.io import load
 
-    name = f"s20_mem_{uuid.uuid4().hex[:8]}"
     events = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -1068,25 +1026,13 @@ def s20_union_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.window("ts", "1 day").alias("w"), "event_type"
     ).agg(F.count("*").alias("n"), dsum_pos("value").alias("sum_value"))
     try:
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain(q)
-        return (
-            spark.table(name)
-            .groupBy(
-                F.col("w.start").cast("date").cast("string").alias("day"),
-                "event_type",
-            )
-            .agg(F.max("n").alias("n"), F.max("sum_value").alias("sum_value"))
-        )
+        drained = _drain_to_memory(spark, agg, "update", skip_nodata=True)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
+    return drained.groupBy(
+        F.col("w.start").cast("date").cast("string").alias("day"),
+        "event_type",
+    ).agg(F.max("n").alias("n"), F.max("sum_value").alias("sum_value"))
 
 
 @query(
@@ -1141,28 +1087,20 @@ def s21_stream_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lets a 100 TB/day crawl dedup online instead of re-running batch
     LSH over history; jobs.streaming_near_dup documents why the merge
     is JVM-side foreachBatch rather than per-bucket Python state."""
-    import os
-    import shutil
-
-    landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    work = scratch_dir("s21_work_")
-    state_dir = os.path.join(work, "state")
-    verdict_dir = os.path.join(work, "verdicts")
-    ckpt = os.path.join(work, "ckpt")
-    stream = jobs.read_document_stream(spark, landing)
-    try:
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_near_dup(stream, state_dir, verdict_dir, ckpt)
-            _drain(q)
-        # one verdict row per doc (a doc's band keys ride one input row,
-        # so they never split across micro-batches); materialize before
-        # the temp dirs go away
-        out = spark.read.parquet(verdict_dir).select("doc_id", "is_dup")
-        out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        # the shared landing outlives this key (atexit-cleaned)
-        shutil.rmtree(work, ignore_errors=True)
+    stream = jobs.read_document_stream(spark, _doc_landing(spark, sf_dir))
+    # one verdict row per doc (a doc's band keys ride one input row, so
+    # they never split across micro-batches)
+    return _drain_to_dir(
+        spark,
+        "s21_work_",
+        lambda work: jobs.streaming_near_dup(
+            stream, f"{work}/state", f"{work}/verdicts", f"{work}/ckpt"
+        ),
+        lambda work: spark.read.parquet(f"{work}/verdicts").select(
+            "doc_id", "is_dup"
+        ),
+        skip_nodata=True,
+    )
 
 
 @query(
@@ -1240,43 +1178,22 @@ def s22_stream_verified_near_dup(
     the two sides would silently diverge — so the drain below asserts
     exactly one data batch and fails loudly if a trigger change ever
     splits it."""
-    import os
-    import shutil
-
-    landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    work = scratch_dir("s22_work_")
-    state_dir = os.path.join(work, "state")
-    verdict_dir = os.path.join(work, "verdicts")
-    ckpt = os.path.join(work, "ckpt")
-    stream = jobs.read_document_stream(spark, landing)
-    try:
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_verified_near_dup(
-                stream, state_dir, verdict_dir, ckpt
-            )
-            _drain(q)
-            data_batches = [
-                p for p in q.recentProgress if p["numInputRows"] > 0
-            ]
-            if len(data_batches) > 1:
-                # 0 data batches (empty landing) is trivially
-                # oracle-consistent — only a SPLIT drain breaks the
-                # bucket-minimum == first-arrival equivalence
-                raise AssertionError(
-                    "s22 oracle assumes a single-batch drain (partner ="
-                    " global bucket minimum == first-arrival verdict);"
-                    f" observed {len(data_batches)} data micro-batches"
-                    " — a trigger change broke the equivalence"
-                    " precondition"
-                )
-        out = spark.read.parquet(verdict_dir).select(
+    stream = jobs.read_document_stream(spark, _doc_landing(spark, sf_dir))
+    # 0 data batches (empty landing) is trivially oracle-consistent —
+    # only a SPLIT drain breaks the bucket-minimum == first-arrival
+    # equivalence
+    return _drain_to_dir(
+        spark,
+        "s22_work_",
+        lambda work: jobs.streaming_verified_near_dup(
+            stream, f"{work}/state", f"{work}/verdicts", f"{work}/ckpt"
+        ),
+        lambda work: spark.read.parquet(f"{work}/verdicts").select(
             "doc_id", "is_candidate", "is_dup"
-        )
-        out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        # the shared landing outlives this key (atexit-cleaned)
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        skip_nodata=True,
+        data_batches=(0, 1),
+    )
 
 
 @query(
@@ -1323,9 +1240,6 @@ def s23_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     and PSI is recomputed from totals, the drained monitor equals the
     batch formulation for ANY batch slicing — the oracle states that
     batch value directly (no single-batch precondition, unlike s22)."""
-    import os
-    import shutil
-
     from fanstats_producer_spark.io import load as _load
 
     ref_counts = (
@@ -1341,22 +1255,17 @@ def s23_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _read_events_stream(spark, sf_dir).filter(
         F.col("event_id") % 2 == 1
     )
-    work = scratch_dir("s23_work_")
-    state_dir = os.path.join(work, "state")
-    monitor_dir = os.path.join(work, "monitor")
-    ckpt = os.path.join(work, "ckpt")
-    try:
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_psi_drift(
-                stream, ref_counts, state_dir, monitor_dir, ckpt
-            )
-            _drain(q)
-        out = spark.read.parquet(monitor_dir).select(
+    return _drain_to_dir(
+        spark,
+        "s23_work_",
+        lambda work: jobs.streaming_psi_drift(
+            stream, ref_counts, f"{work}/state", f"{work}/monitor", f"{work}/ckpt"
+        ),
+        lambda work: spark.read.parquet(f"{work}/monitor").select(
             "event_type", "psi_e9", "n_ref", "n_live"
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        skip_nodata=True,
+    )
 
 
 @query(
@@ -1413,21 +1322,13 @@ def s24_stream_contamination_gate(
             F.col("doc_id") % 50 == 0
         )
         shingles = _EVAL_SHINGLES_CACHE[key] = eval_shingle_set(ev_docs)
-    landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    stream = jobs.read_document_stream(spark, landing)
-    name = f"s24_mem_{uuid.uuid4().hex[:8]}"
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            contamination_gate(stream, shingles)
-            .select("doc_id")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    return spark.table(name).select("doc_id").localCheckpoint(eager=True)
+    stream = jobs.read_document_stream(spark, _doc_landing(spark, sf_dir))
+    kept = contamination_gate(stream, shingles).select("doc_id")
+    return (
+        _drain_to_memory(spark, kept, "append", skip_nodata=True)
+        .select("doc_id")
+        .localCheckpoint(eager=True)
+    )
 
 
 @query(
@@ -1463,29 +1364,22 @@ def s25_stream_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact duplicates (the corpus plants them) and the FP count is 0,
     matching the (1-e^{-kn/m})^k ≈ 4e-4 expectation at n=2.5k — the
     number a capacity planner reads off before sizing m."""
-    import os
-    import shutil
-
-    work = scratch_dir("s25_work_")
-    landing = _stage_parity_landing(spark, sf_dir)  # shared, read-only
-    state_dir = os.path.join(work, "state")
-    verdict_dir = os.path.join(work, "verdicts")
-    ckpt = os.path.join(work, "ckpt")
-    try:
-        stream = (
-            spark.readStream.schema(jobs.DOCUMENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(landing)
-        )
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_bloom_dedup(
-                stream, state_dir, verdict_dir, ckpt
-            )
-            _drain(q)
-        out = spark.read.parquet(verdict_dir).select("doc_id", "is_dup")
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    stream = (
+        spark.readStream.schema(jobs.DOCUMENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(_stage_parity_landing(spark, sf_dir))  # shared, read-only
+    )
+    return _drain_to_dir(
+        spark,
+        "s25_work_",
+        lambda work: jobs.streaming_bloom_dedup(
+            stream, f"{work}/state", f"{work}/verdicts", f"{work}/ckpt"
+        ),
+        lambda work: spark.read.parquet(f"{work}/verdicts").select(
+            "doc_id", "is_dup"
+        ),
+        skip_nodata=True,
+    )
 
 
 def _s26_oracle() -> str:
@@ -1517,10 +1411,6 @@ def s26_stream_semantic_decontam(
     leakage gets caught before a vector ever lands in the training
     index; the n-gram gate (s24) and this one are the two production
     arms of the same admission pipeline."""
-    import atexit
-    import os
-    import shutil
-
     from fanstats_producer_spark.io import load as _load
     from fanstats_producer_spark.operators.similarity import (
         _X66_N_EVAL,
@@ -1528,35 +1418,13 @@ def s26_stream_semantic_decontam(
         semantic_decontam_gate,
     )
 
-    emb = _load(spark, sf_dir, "embeddings")
-    evs = eval_matrix_row(emb)
-    path = f"{sf_dir}/embeddings.parquet"
-    schema = spark.read.parquet(path).schema
-    landing = scratch_dir("s26_landing_")
-    atexit.register(shutil.rmtree, landing, ignore_errors=True)
-    dst = os.path.join(landing, "embeddings-000.parquet")
-    try:
-        os.link(path, dst)
-    except OSError:
-        shutil.copy(path, dst)
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(landing)
-        .filter(F.col("vec_id") >= _X66_N_EVAL)
+    evs = eval_matrix_row(_load(spark, sf_dir, "embeddings"))
+    stream = _fixture_stream(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id") >= _X66_N_EVAL
     )
-    name = f"s26_mem_{uuid.uuid4().hex[:8]}"
-    with _few_partitions(spark), _skip_nodata_batch(spark):
-        q = (
-            semantic_decontam_gate(stream, evs)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
+    gated = semantic_decontam_gate(stream, evs)
     return (
-        spark.table(name)
+        _drain_to_memory(spark, gated, "append", skip_nodata=True)
         .select("vec_id", "nearest_eval_id", "max_sim_e6", "contaminated")
         .localCheckpoint(eager=True)
     )
@@ -1609,10 +1477,6 @@ def s26b_stream_decontam_large_eval(
     — entries whose fast sim lands within 1e-10 of an e6 floor
     boundary are recomputed with the fold's exact scalar sequence
     (similarity._decontam_blas), so no ulp class remains."""
-    import atexit
-    import os
-    import shutil
-
     from fanstats_producer_spark.io import load as _load
     from fanstats_producer_spark.operators.similarity import _as_double
 
@@ -1621,36 +1485,22 @@ def s26b_stream_decontam_large_eval(
         F.col("vec_id").alias("eval_id"),
         _as_double(F.col("embedding")).alias("ev"),
     )
-    path = f"{sf_dir}/embeddings.parquet"
-    schema = spark.read.parquet(path).schema
-    landing = scratch_dir("s26b_landing_")
-    atexit.register(shutil.rmtree, landing, ignore_errors=True)
-    dst = os.path.join(landing, "embeddings-000.parquet")
-    try:
-        os.link(path, dst)
-    except OSError:
-        shutil.copy(path, dst)
     stream = (
-        spark.readStream.schema(schema)
-        .parquet(landing)
+        _fixture_stream(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % 2 == 1)
         .select("vec_id", "embedding")
     )
-    work = scratch_dir("s26b_work_")
-    verdict_dir = os.path.join(work, "verdicts")
-    ckpt = os.path.join(work, "ckpt")
-    try:
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_decontam_crossjoin(
-                stream, evals, verdict_dir, ckpt, scorer="blas"
-            )
-            _drain(q)
-        out = spark.read.parquet(verdict_dir).select(
+    return _drain_to_dir(
+        spark,
+        "s26b_work_",
+        lambda work: jobs.streaming_decontam_crossjoin(
+            stream, evals, f"{work}/verdicts", f"{work}/ckpt", scorer="blas"
+        ),
+        lambda work: spark.read.parquet(f"{work}/verdicts").select(
             "vec_id", "nearest_eval_id", "max_sim_e6", "contaminated"
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        skip_nodata=True,
+    )
 
 
 @query(
@@ -1687,46 +1537,28 @@ def s27_stream_sequence_packing(
     order: ORDER BY (doc_id % 2), doc_id — batch A then batch B, each
     in doc_id order.  The cross-batch carry is the thing under test:
     batch B's offsets continue exactly where batch A's total ended."""
-    import os
-    import shutil
-
-    work = scratch_dir("s27_work_")
-    landing = _stage_parity_landing(spark, sf_dir)  # shared, read-only
-    manifest_dir = os.path.join(work, "manifest")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    try:
-        stream = (
-            spark.readStream.schema(jobs.DOCUMENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(landing)
-        )
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_sequence_packing(
-                stream, manifest_dir, state_dir, ckpt
-            )
-            _drain(q)
-            data_batches = [
-                p for p in q.recentProgress if p["numInputRows"] > 0
-            ]
-            if len(data_batches) != 2:
-                raise AssertionError(
-                    "s27 oracle states the two-parity-batch arrival"
-                    f" order; observed {len(data_batches)} data"
-                    " micro-batches — the staged landing or trigger"
-                    " changed"
-                )
-        out = spark.read.parquet(manifest_dir).select(
+    stream = (
+        spark.readStream.schema(jobs.DOCUMENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(_stage_parity_landing(spark, sf_dir))  # shared, read-only
+    )
+    return _drain_to_dir(
+        spark,
+        "s27_work_",
+        lambda work: jobs.streaming_sequence_packing(
+            stream, f"{work}/manifest", f"{work}/state", f"{work}/ckpt"
+        ),
+        lambda work: spark.read.parquet(f"{work}/manifest").select(
             "doc_id",
             "n_tokens",
             "start_offset",
             "first_seq",
             "last_seq",
             "n_seqs",
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        skip_nodata=True,
+        data_batches=(2,),
+    )
 
 
 @query(
@@ -1771,39 +1603,19 @@ def s28_stream_image_near_dup(
     "partner = global bucket minimum" equals the stream's
     first-arrival verdict only because the drain below consumes the
     whole landing in ONE data micro-batch — asserted loudly."""
-    import os
-    import shutil
-
-    landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    work = scratch_dir("s28_work_")
-    state_dir = os.path.join(work, "state")
-    verdict_dir = os.path.join(work, "verdicts")
-    ckpt = os.path.join(work, "ckpt")
-    stream = jobs.read_document_stream(spark, landing)
-    try:
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_phash_near_dup(
-                stream, state_dir, verdict_dir, ckpt
-            )
-            _drain(q)
-            data_batches = [
-                p for p in q.recentProgress if p["numInputRows"] > 0
-            ]
-            if len(data_batches) > 1:
-                raise AssertionError(
-                    "s28 oracle assumes a single-batch drain (partner ="
-                    " global bucket minimum == first-arrival verdict);"
-                    f" observed {len(data_batches)} data micro-batches"
-                    " — a trigger change broke the equivalence"
-                    " precondition"
-                )
-        out = spark.read.parquet(verdict_dir).select(
+    stream = jobs.read_document_stream(spark, _doc_landing(spark, sf_dir))
+    return _drain_to_dir(
+        spark,
+        "s28_work_",
+        lambda work: jobs.streaming_phash_near_dup(
+            stream, f"{work}/state", f"{work}/verdicts", f"{work}/ckpt"
+        ),
+        lambda work: spark.read.parquet(f"{work}/verdicts").select(
             "doc_id", "is_candidate", "is_dup"
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        # the shared landing outlives this key (atexit-cleaned)
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        skip_nodata=True,
+        data_batches=(0, 1),
+    )
 
 
 @query(
@@ -1844,45 +1656,27 @@ def s29_stream_audio_near_dup(
 
     ORACLE PRECONDITION: single-batch drain (the s22/s28 rationale),
     asserted loudly below."""
-    import os
-    import shutil
-
     from fanstats_producer_spark.operators.multimodal import (
         audio_fp_features,
     )
 
-    landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    work = scratch_dir("s29_work_")
-    state_dir = os.path.join(work, "state")
-    verdict_dir = os.path.join(work, "verdicts")
-    ckpt = os.path.join(work, "ckpt")
-    stream = jobs.read_document_stream(spark, landing)
-    try:
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_phash_near_dup(
-                stream,
-                state_dir,
-                verdict_dir,
-                ckpt,
-                features=audio_fp_features,
-            )
-            _drain(q)
-            data_batches = [
-                p for p in q.recentProgress if p["numInputRows"] > 0
-            ]
-            if len(data_batches) > 1:
-                raise AssertionError(
-                    "s29 oracle assumes a single-batch drain (partner ="
-                    " global bucket minimum == first-arrival verdict);"
-                    f" observed {len(data_batches)} data micro-batches"
-                )
-        out = spark.read.parquet(verdict_dir).select(
+    stream = jobs.read_document_stream(spark, _doc_landing(spark, sf_dir))
+    return _drain_to_dir(
+        spark,
+        "s29_work_",
+        lambda work: jobs.streaming_phash_near_dup(
+            stream,
+            f"{work}/state",
+            f"{work}/verdicts",
+            f"{work}/ckpt",
+            features=audio_fp_features,
+        ),
+        lambda work: spark.read.parquet(f"{work}/verdicts").select(
             "doc_id", "is_candidate", "is_dup"
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        # the shared landing outlives this key (atexit-cleaned)
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        skip_nodata=True,
+        data_batches=(0, 1),
+    )
 
 
 @query("s30_stream_weighted_sample", oracle=sampling.X92_ORACLE)
@@ -1897,24 +1691,18 @@ def s30_stream_weighted_sample(
     ANY micro-batch slicing and no single-batch precondition exists —
     unlike the first-arrival gates (s22/s28/s29), this key is
     batching-invariant by algebra, not by drain shape."""
-    import os
-    import shutil
-
-    landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    work = scratch_dir("s30_work_")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    stream = jobs.read_document_stream(spark, landing)
-    try:
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_weighted_sample(stream, state_dir, ckpt)
-            _drain(q)
-        out = spark.read.parquet(state_dir).select(
+    stream = jobs.read_document_stream(spark, _doc_landing(spark, sf_dir))
+    return _drain_to_dir(
+        spark,
+        "s30_work_",
+        lambda work: jobs.streaming_weighted_sample(
+            stream, f"{work}/state", f"{work}/ckpt"
+        ),
+        lambda work: spark.read.parquet(f"{work}/state").select(
             "doc_id", "n_tokens", "key_e9"
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        skip_nodata=True,
+    )
 
 
 @query("s31_stream_quantile_monitor", oracle=sketches.X97_ORACLE)
@@ -1928,21 +1716,18 @@ def s31_stream_quantile_monitor(
     is x97's verbatim: min-k merges exactly (min-k(A∪B) =
     min-k(min-k(A)∪min-k(B)) — pytest-pinned), so the online sketch is
     batching-invariant by algebra and no drain precondition exists."""
-    import os
-    import shutil
-
-    work = scratch_dir("s31_work_")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
     stream = _read_events_stream(spark, sf_dir)
-    try:
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_quantile_monitor(stream, state_dir, ckpt)
-            _drain(q)
-        out = sketches.quantile_estimates(spark.read.parquet(state_dir))
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain_to_dir(
+        spark,
+        "s31_work_",
+        lambda work: jobs.streaming_quantile_monitor(
+            stream, f"{work}/state", f"{work}/ckpt"
+        ),
+        lambda work: sketches.quantile_estimates(
+            spark.read.parquet(f"{work}/state")
+        ),
+        skip_nodata=True,
+    )
 
 
 @query("s32_stream_keyword_tags", oracle=text_extra.X101_ORACLE)
@@ -1954,36 +1739,30 @@ def s32_stream_keyword_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     are batch-slicing-invariant by construction and the oracle is
     x101's VERBATIM (the naive every-start-position probe), with no
     drain precondition."""
-    import os
-    import shutil
-
     from fanstats_producer_spark.functions.text_extra import (
         _X101_TERMS,
         keyword_tags,
     )
 
-    landing = _doc_landing(spark, sf_dir)  # shared, read-only
-    work = scratch_dir("s32_work_")
-    out_dir = os.path.join(work, "tags")
-    ckpt = os.path.join(work, "ckpt")
-    stream = jobs.read_document_stream(spark, landing)
-    try:
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = (
-                keyword_tags(stream, _X101_TERMS)
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain(q)
-        out = spark.read.parquet(out_dir).select(
+    tags = keyword_tags(
+        jobs.read_document_stream(spark, _doc_landing(spark, sf_dir)),
+        _X101_TERMS,
+    )
+    return _drain_to_dir(
+        spark,
+        "s32_work_",
+        lambda work: (
+            tags.writeStream.format("parquet")
+            .option("path", f"{work}/tags")
+            .option("checkpointLocation", f"{work}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        ),
+        lambda work: spark.read.parquet(f"{work}/tags").select(
             "doc_id", "term", "n_hits"
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        skip_nodata=True,
+    )
 
 
 @query("s33_stream_ks_monitor", oracle=quality_checks.X105_ORACLE)
@@ -1995,23 +1774,18 @@ def s33_stream_ks_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quality_checks.ks_matrix_from_counts).  Counts are sums, so the
     monitor is batch-slicing-invariant by commutativity and the
     oracle is x105's VERBATIM with no drain precondition."""
-    import os
-    import shutil
-
-    work = scratch_dir("s33_work_")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
     stream = _read_events_stream(spark, sf_dir)
-    try:
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_ks_monitor(stream, state_dir, ckpt)
-            _drain(q)
-        out = quality_checks.ks_matrix_from_counts(
-            spark.read.parquet(state_dir)
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain_to_dir(
+        spark,
+        "s33_work_",
+        lambda work: jobs.streaming_ks_monitor(
+            stream, f"{work}/state", f"{work}/ckpt"
+        ),
+        lambda work: quality_checks.ks_matrix_from_counts(
+            spark.read.parquet(f"{work}/state")
+        ),
+        skip_nodata=True,
+    )
 
 
 @query("s34_stream_auc_monitor", oracle=quality_checks.X107_ORACLE)
@@ -2028,25 +1802,21 @@ def s34_stream_auc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to batch x107 on any input.  Counts are sums, so the
     monitor is batch-slicing-invariant by commutativity and the oracle
     is x107's VERBATIM with no drain precondition."""
-    import os
-    import shutil
-
-    work = scratch_dir("s34_work_")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
     stream = _read_events_stream(spark, sf_dir)
-    try:
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_value_counts_monitor(
-                stream, state_dir, ckpt, job_name="streaming_auc_monitor"
-            )
-            _drain(q)
-        out = quality_checks.auc_matrix_from_counts(
-            spark.read.parquet(state_dir)
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain_to_dir(
+        spark,
+        "s34_work_",
+        lambda work: jobs.streaming_value_counts_monitor(
+            stream,
+            f"{work}/state",
+            f"{work}/ckpt",
+            job_name="streaming_auc_monitor",
+        ),
+        lambda work: quality_checks.auc_matrix_from_counts(
+            spark.read.parquet(f"{work}/state")
+        ),
+        skip_nodata=True,
+    )
 
 
 @query("s35_stream_chi2_monitor", oracle=quality_checks.X109_ORACLE)
@@ -2062,36 +1832,20 @@ def s35_stream_chi2_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cell expression reads only the counts).  Counts are sums, so
     the monitor is batch-slicing-invariant by commutativity and the
     oracle is x109's VERBATIM with no drain precondition."""
-    import atexit
-    import os
-    import shutil
-
-    work = scratch_dir("s35_work_")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
     # the shared _doc_landing JSON staging drops the source column, so
-    # stage the parquet directly (the s26b pattern: hard-link, zero
-    # data movement; schema from a static read — never inferred)
-    path = f"{sf_dir}/documents.parquet"
-    schema = spark.read.parquet(path).schema
-    landing = scratch_dir("s35_landing_")
-    atexit.register(shutil.rmtree, landing, ignore_errors=True)
-    dst = os.path.join(landing, "documents-000.parquet")
-    try:
-        os.link(path, dst)
-    except OSError:
-        shutil.copy(path, dst)
-    stream = spark.readStream.schema(schema).parquet(landing)
-    try:
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_contingency_monitor(stream, state_dir, ckpt)
-            _drain(q)
-        out = quality_checks.chi2_from_counts(
-            spark.read.parquet(state_dir)
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    # stage the parquet directly (_fixture_stream)
+    stream = _fixture_stream(spark, sf_dir, "documents")
+    return _drain_to_dir(
+        spark,
+        "s35_work_",
+        lambda work: jobs.streaming_contingency_monitor(
+            stream, f"{work}/state", f"{work}/ckpt"
+        ),
+        lambda work: quality_checks.chi2_from_counts(
+            spark.read.parquet(f"{work}/state")
+        ),
+        skip_nodata=True,
+    )
 
 
 @query("s36_stream_embedding_drift", oracle=quality_checks.X114_ORACLE)
@@ -2107,32 +1861,15 @@ def s36_stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality_checks.embedding_drift_from_sums, bit-identical to batch
     x114 (integer sums are batch-slicing-invariant by commutativity),
     so the oracle is x114's VERBATIM with no drain precondition."""
-    import atexit
-    import os
-    import shutil
-
-    work = scratch_dir("s36_work_")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    # stage the parquet directly (the s35 pattern: hard-link, zero data
-    # movement; schema from a static read — never inferred)
-    path = f"{sf_dir}/embeddings.parquet"
-    schema = spark.read.parquet(path).schema
-    landing = scratch_dir("s36_landing_")
-    atexit.register(shutil.rmtree, landing, ignore_errors=True)
-    dst = os.path.join(landing, "embeddings-000.parquet")
-    try:
-        os.link(path, dst)
-    except OSError:
-        shutil.copy(path, dst)
-    stream = spark.readStream.schema(schema).parquet(landing)
-    try:
-        with _few_partitions(spark), _skip_nodata_batch(spark):
-            q = jobs.streaming_embedding_drift_monitor(stream, state_dir, ckpt)
-            _drain(q)
-        out = quality_checks.embedding_drift_from_sums(
-            spark.read.parquet(state_dir)
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    stream = _fixture_stream(spark, sf_dir, "embeddings")
+    return _drain_to_dir(
+        spark,
+        "s36_work_",
+        lambda work: jobs.streaming_embedding_drift_monitor(
+            stream, f"{work}/state", f"{work}/ckpt"
+        ),
+        lambda work: quality_checks.embedding_drift_from_sums(
+            spark.read.parquet(f"{work}/state")
+        ),
+        skip_nodata=True,
+    )

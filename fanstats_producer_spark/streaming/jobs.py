@@ -20,6 +20,8 @@ exactly-once via checkpointed offsets.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -113,6 +115,23 @@ class _StagedState:
             os.rename(self.state_dir, self.retired)
         os.rename(self.staged, self.state_dir)
         shutil.rmtree(self.retired, ignore_errors=True)
+
+
+def _foreach_batch(
+    df: DataFrame,
+    merge: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Start `df` as an AvailableNow foreachBatch drain: `merge(batch_df,
+    batch_id)` runs once per micro-batch, and the checkpoint makes each
+    batch's offsets exactly-once across restarts.  The one sink tail
+    every foreachBatch job in this module shares."""
+    return (
+        df.writeStream.foreachBatch(merge)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def read_event_stream(
@@ -291,13 +310,7 @@ def streaming_near_dup(
         combined.write.mode("overwrite").parquet(st.staged)
         st.promote()
 
-    return (
-        streaming_band_keys(docs)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(streaming_band_keys(docs), merge, checkpoint_dir)
 
 
 def streaming_verified_near_dup(
@@ -430,12 +443,8 @@ def streaming_verified_near_dup(
             pass
         st.promote()
 
-    return (
-        streaming_band_keys(docs, carry=("text",))
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch(
+        streaming_band_keys(docs, carry=("text",)), merge, checkpoint_dir
     )
 
 
@@ -530,12 +539,8 @@ def streaming_phash_near_dup(
         combined.write.mode("overwrite").parquet(st.staged)
         st.promote()
 
-    return (
-        streaming_phash_band_keys(docs, features)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch(
+        streaming_phash_band_keys(docs, features), merge, checkpoint_dir
     )
 
 
@@ -585,12 +590,7 @@ def streaming_decontam_crossjoin(
             os.path.join(verdict_dir, f"batch={batch_id}")
         )
 
-    return (
-        vectors.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(vectors, gate, checkpoint_dir)
 
 
 def write_partitioned_stream(
@@ -745,12 +745,7 @@ def upsert_latest_per_key(
         latest.write.mode("overwrite").parquet(st.staged)
         st.promote()
 
-    return (
-        df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(df, merge, checkpoint_dir)
 
 
 def user_value_stats_tws(events: DataFrame) -> DataFrame:
@@ -1098,12 +1093,7 @@ def streaming_psi_drift(
             combined.write.mode("overwrite").parquet(st.staged)
             st.promote(batch_id)
 
-    return (
-        bucketed.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(bucketed, merge, checkpoint_dir)
 
 
 def streaming_bloom_dedup(
@@ -1198,12 +1188,7 @@ def streaming_bloom_dedup(
         combined.write.mode("overwrite").parquet(st.staged)
         st.promote(batch_id)
 
-    return (
-        hashed.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(hashed, merge, checkpoint_dir)
 
 
 def streaming_sequence_packing(
@@ -1291,12 +1276,7 @@ def streaming_sequence_packing(
         new_state.coalesce(1).write.mode("overwrite").parquet(st.staged)
         st.promote(batch_id)
 
-    return (
-        docs.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(docs, merge, checkpoint_dir)
 
 
 def streaming_weighted_sample(
@@ -1345,13 +1325,7 @@ def streaming_weighted_sample(
 
     from fanstats_producer_spark.operators.sampling import ares_keyed
 
-    return (
-        ares_keyed(docs)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(ares_keyed(docs), merge, checkpoint_dir)
 
 
 def streaming_quantile_monitor(
@@ -1397,12 +1371,8 @@ def streaming_quantile_monitor(
         combined.write.mode("overwrite").parquet(st.staged)
         st.promote()
 
-    return (
-        events.select("event_id", "value")
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch(
+        events.select("event_id", "value"), merge, checkpoint_dir
     )
 
 
@@ -1453,12 +1423,8 @@ def streaming_value_counts_monitor(
         combined.write.mode("overwrite").parquet(st.staged)
         st.promote(batch_id)
 
-    return (
-        events.select("event_type", "value")
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch(
+        events.select("event_type", "value"), merge, checkpoint_dir
     )
 
 
@@ -1514,13 +1480,7 @@ def streaming_contingency_monitor(
         combined.write.mode("overwrite").parquet(st.staged)
         st.promote(batch_id)
 
-    return (
-        docs.select("lang", "source")
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(docs.select("lang", "source"), merge, checkpoint_dir)
 
 
 def streaming_embedding_drift_monitor(
@@ -1565,10 +1525,6 @@ def streaming_embedding_drift_monitor(
         combined.write.mode("overwrite").parquet(st.staged)
         st.promote(batch_id)
 
-    return (
-        emb.select("vec_id", "label", "embedding")
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _foreach_batch(
+        emb.select("vec_id", "label", "embedding"), merge, checkpoint_dir
     )

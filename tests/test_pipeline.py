@@ -79,8 +79,8 @@ def test_rest_datasource_parallel_topics(spark):
 def test_rest_datasource_custom_fetcher_via_import_spec(spark):
     """A custom fetcher must work although the reader is constructed in
     a plan-time Python worker and run on executor workers — processes
-    that import rest_datasource fresh, where runtime register_fetcher()
-    calls from the driver are invisible.  The supported cross-process
+    that import rest_datasource fresh, where anything the driver adds to
+    FETCHERS at run time is invisible.  The supported cross-process
     path is an importable 'module:attr' spec, resolved in __init__ and
     pickled with the reader."""
     rest_datasource.register(spark)
